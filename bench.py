@@ -13,7 +13,10 @@ entry's persisted intermediates (shingle/bigram tables) can't steal
 executor memory from — and so flatter the reps of — unrelated queries
 (VERDICT r5 #3 drift hypothesis). Sidecars are stamped with the git
 sha + wall-clock so commit messages can't diverge from artifacts
-(VERDICT r5 #8).
+(VERDICT r5 #8), and carry each entry's job/stage counters (tasks,
+shuffle, spill, GC) read in-process by `perfbench.probe.StageMeter`.
+The walls are a report: the suite gates on plan work
+(tests/test_plan_lint.py), not on a committed timing.
 """
 
 from __future__ import annotations
@@ -24,90 +27,13 @@ import statistics
 import subprocess
 import sys
 import time
-import urllib.request
 
 from milan_telecom_etl__spark.caching import release_tracked
 from milan_telecom_etl__spark.session import get_spark
+from perfbench.probe import StageMeter
 
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 WARMUP = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-UI_PORT = int(os.environ.get("SPARK_GRAFT_BENCH_UI_PORT", "4060"))
-
-
-def _stages(spark) -> dict[int, dict] | None:
-    """Completed-stage map from the UI REST API (the same JSON the
-    History Server serves). Returns None when the UI is unreachable so
-    counters degrade to absent, never sink the sweep."""
-    try:
-        app_id = spark.sparkContext.applicationId
-        url = (
-            f"http://localhost:{UI_PORT}/api/v1/applications/"
-            f"{app_id}/stages?status=complete"
-        )
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return {s["stageId"]: s for s in json.load(r)}
-    except Exception:
-        return None
-
-
-def _gc_ms(spark) -> int:
-    try:
-        beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-        return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
-    except Exception:
-        return 0
-
-
-def _entry_counters(before: dict[int, dict] | None, after: dict[int, dict] | None):
-    """Spill / peak-memory counters over the stages an entry's
-    warmup+reps ran (VERDICT r14 #2). Purpose: a contaminated sweep
-    self-identifies — background memory pressure makes the
-    highest-memory shuffle entries SPILL where the committed anchor
-    shows none (the r14 banded-minhash 1.8-2.9x tell, which took
-    judge-side isolation probes to adjudicate). Stage IDs are
-    monotonic, so eviction of old stages under spark.ui.retainedStages
-    can't miscount new ones."""
-    if before is None or after is None:
-        return None
-    hi = max(before, default=-1)
-    new = [s for sid, s in after.items() if sid > hi]
-    return {
-        "spill_mem_mb": round(sum(s.get("memoryBytesSpilled", 0) for s in new) / 1e6, 1),
-        "spill_disk_mb": round(sum(s.get("diskBytesSpilled", 0) for s in new) / 1e6, 1),
-        "peak_exec_mem_mb": round(
-            max((s.get("peakExecutionMemory", 0) for s in new), default=0) / 1e6, 1
-        ),
-    }
-
-
-def _anchor_detail(repo: str, sf: str) -> dict | None:
-    """Committed steady-state anchor (BENCH_REFERENCE.json at HEAD —
-    the builder-pinned idle-machine sweep, the same anchor
-    tests/test_bench_budgets.py deflates against). Read via `git show`
-    so a working-tree overwrite can't move it. None when absent or at
-    a different scale factor."""
-    try:
-        out = subprocess.run(
-            ["git", "show", "HEAD:BENCH_REFERENCE.json"],
-            cwd=repo,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if out.returncode != 0:
-            return None
-        data = json.loads(out.stdout)
-        if str(data.get("sf")) != str(sf):
-            return None
-        return data
-    except Exception:
-        return None
-
-
-def _spill_mb(c: dict | None) -> float:
-    if not c:
-        return 0.0
-    return float(c.get("spill_mem_mb", 0)) + float(c.get("spill_disk_mb", 0))
 
 
 def _git_sha(repo: str) -> str:
@@ -126,18 +52,12 @@ def _git_sha(repo: str) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # UI on for the REST counter reads; retention bounded so the
-    # per-entry stage-list fetch stays ~constant-size over a 252-entry
-    # sweep (the status store runs regardless of the UI, so serving it
-    # doesn't perturb the timed reps)
+    # StageMeter reads each entry's stages back from the status store,
+    # whose cleanup evicts skipped stages first once it holds
+    # retainedStages (default 1000): hold a whole sweep so no entry
+    # loses a stage between its marks
     spark = get_spark(
-        app_name="bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.retainedStages": "600",
-        },
+        app_name="bench", extra_conf={"spark.ui.retainedStages": "100000"}
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -170,14 +90,13 @@ def main() -> None:
     except Exception:
         pass
 
-    def time_entry(name: str, fn) -> tuple[float, dict | None]:
-        """One entry under the UNCHANGED timed protocol: clearCache,
-        WARMUP untimed rep(s), median of REPS timed `fn().count()`
-        walls, spill/GC counters over the entry's stages."""
+    meter = StageMeter(spark)
+    timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
+    for name, fn in qs.items():
         reps: list[float] = []
-        stages_before = _stages(spark)
-        gc_before = _gc_ms(spark)
         try:
+            start = meter.mark()
             # clear ONCE per query: leaked persists from earlier queries
             # can't steal memory (the r4->r5 drift), while a query's own
             # persisted intermediates stay warm across its reps — the
@@ -189,95 +108,28 @@ def main() -> None:
             # medians drift with REGISTRY SIZE, not code (PLANS.md r9:
             # the five "drifted" entries ran FASTER mid-sweep than
             # isolated — cross-entry warm-JIT subsidy). Discarding the
-            # warmup measures steady state; budgets re-baselined with
-            # this protocol (r8 verdict #1).
+            # warmup measures steady state.
             for _ in range(WARMUP):
                 fn(spark, sf_dir).count()
             for _ in range(REPS):
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 reps.append(time.perf_counter() - t0)
-            med = round(statistics.median(reps), 4)
-            # counters cover the entry's warmup+reps in aggregate —
-            # comparable across sweeps because the anchor records them
-            # under the identical protocol
-            c = _entry_counters(stages_before, _stages(spark))
-            if c is not None:
-                # GC delta over the entry's warmup+reps: the slow-mode
-                # tell for the high-memory family when spill reads zero
-                # (r15 finding — in-sweep 2-3x walls with zero spill)
-                c["gc_sec"] = round((_gc_ms(spark) - gc_before) / 1e3, 2)
-            return med, c
+            timings[name] = round(statistics.median(reps), 4)
+            # job/stage work over the entry's warmup+reps in aggregate,
+            # read in-process from the status store (perfbench/probe.py)
+            counters[name] = {
+                k: round(v, 3) for k, v in meter.delta(start, meter.mark()).items()
+            }
+        except Exception as e:  # never let one query sink the whole bench
+            print(f"bench: {name} failed: {e}", file=sys.stderr)
+            timings[name] = -1.0
         finally:
             # registry-declared persists (caching.py) are released by
             # the harness AFTER the reps — warm within an entry's
             # median-of-3, clean before the next entry (VERDICT r12 #1)
             release_tracked()
 
-    timings: dict[str, float] = {}
-    counters: dict[str, dict] = {}
-    for name, fn in qs.items():
-        try:
-            med, c = time_entry(name, fn)
-            timings[name] = med
-            if c is not None:
-                counters[name] = c
-        except Exception as e:  # never let one query sink the whole bench
-            print(f"bench: {name} failed: {e}", file=sys.stderr)
-            timings[name] = -1.0
-
-    # STEADY-STATE RE-MEASURE (VERDICT r15 #2b). PLANS.md documents a
-    # bimodal machine state — "first-sweep-after-churn slow mode":
-    # after heavy memory churn (e.g. the driver's 254-entry correctness
-    # gate, which precedes every judge-time sweep) a roving subset of
-    # entries reads 2-14x their committed anchor with ZERO spill and
-    # flat GC, and none of the spikes reproduce on a back-to-back
-    # second run (five bracketing sweeps across r14-r15; the r15
-    # adjudication had to overturn a formally-failed baseline gate on
-    # exactly this). This block makes the protocol itself produce the
-    # steady-state number instead of asking the judge to infer it: any
-    # entry reading >1.8x its committed BENCH_REFERENCE anchor whose
-    # own counters CLEAR it of execution pressure (no spill, GC within
-    # 2x anchor) is re-measured ONCE under the identical protocol, and
-    # the lower median wins. The original reading is preserved in the
-    # sidecar (`churn_reruns`), so nothing is hidden; a genuine code
-    # regression keeps its slow reading because a re-run reproduces it.
-    # Opt out with SPARK_GRAFT_BENCH_STEADY=0.
-    churn_reruns: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_STEADY", "1") != "0" and not only:
-        repo0 = os.path.dirname(os.path.abspath(__file__))
-        anchor = _anchor_detail(repo0, sf)
-        if anchor:
-            aq = {k: v for k, v in anchor.get("queries", {}).items() if v > 0}
-            ac = anchor.get("counters", {})
-            flagged = [
-                n
-                for n, t in timings.items()
-                if t > 0
-                and aq.get(n, 0) > 0
-                and t > 1.8 * aq[n]
-                and _spill_mb(counters.get(n)) < 10.0
-                and counters.get(n, {}).get("gc_sec", 0.0)
-                <= max(2.0 * ac.get(n, {}).get("gc_sec", 0.0), 3.0)
-            ]
-            # a uniform >1.8x sweep is a real regression or a >2x
-            # machine day, both of which need a human (the budget
-            # tests' deflation-clamp rationale) — don't re-run the
-            # whole registry chasing it
-            flagged = sorted(
-                flagged, key=lambda n: -(timings[n] - aq[n])
-            )[:40]
-            for name in flagged:
-                try:
-                    med, c = time_entry(name, qs[name])
-                except Exception as e:
-                    print(f"bench: steady re-run {name} failed: {e}", file=sys.stderr)
-                    continue
-                if med < timings[name]:
-                    churn_reruns[name] = timings[name]
-                    timings[name] = med
-                    if c is not None:
-                        counters[name] = c
     spark.catalog.clearCache()
 
     ok = {k: v for k, v in timings.items() if v >= 0}
@@ -321,10 +173,6 @@ def main() -> None:
         "sf": sf,
         "queries": timings,
         "counters": counters,
-        # first-pass medians of entries the steady-state block
-        # re-measured (VERDICT r15 #2b) — the pre-re-run numbers, kept
-        # so the two readings are always both on disk
-        "churn_reruns": churn_reruns,
         "jvm_pools_mb": jvm_pools,
         "git_sha": _git_sha(repo),
         "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),

@@ -1140,18 +1140,14 @@ def _cc_labels_single_task(e: DataFrame) -> DataFrame:
     return e.repartition(1).mapInPandas(finish, "doc_id long, label long")
 
 
-def _cc_labels(
-    pairs: DataFrame, max_rounds: int | None = None
-) -> tuple[DataFrame | None, int]:
+def _cc_labels(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     """Component labels over a (doc_a, doc_b) pair frame, dispatching on
     the verified edge count: below `_CC_BROADCAST_MAX_STATE` the
-    single-executor-task union-find finishes in one job; above it (or
-    when a caller pins `max_rounds`) the alternating-star rounds take
-    over. Both paths emit identical rows — (doc_id, label=component
-    min) for every non-root edge-touching node — and neither collects
-    anything to the driver."""
-    if max_rounds is not None:
-        return _cc_labels_alternating(pairs, max_rounds)
+    single-executor-task union-find finishes in one job; above it the
+    alternating-star rounds take over. Both paths run to fixpoint and
+    emit identical rows — (doc_id, label=component min) for every
+    non-root edge-touching node — and neither collects anything to the
+    driver."""
     e = (
         pairs.select(
             F.greatest(F.col("doc_a"), F.col("doc_b")).alias("hi"),
@@ -1178,9 +1174,7 @@ def _cc_labels(
     return _cc_labels_alternating(pairs)
 
 
-def _cc_labels_alternating(
-    pairs: DataFrame, max_rounds: int | None = None
-) -> tuple[DataFrame | None, int]:
+def _cc_labels_alternating(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     """Distributed connected components by ALTERNATING LARGE-STAR /
     SMALL-STAR rounds (Kiveris, Lattanzi, Mirrokni, Rastogi,
     Vassilvitskii — "Connected Components in MapReduce and Beyond",
@@ -1239,9 +1233,8 @@ def _cc_labels_alternating(
     def hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_state else df
 
-    rounds = max_rounds if max_rounds is not None else 10_000  # safety bound
     prev = e
-    for _ in range(rounds):
+    for _ in range(10_000):  # safety bound; converges in O(log n) rounds
         bid = prev.select(F.col("hi").alias("x"), F.col("lo").alias("y")).union(
             prev.select(F.col("lo").alias("x"), F.col("hi").alias("y"))
         )
@@ -1309,7 +1302,6 @@ def near_dup_clusters(
     docs: DataFrame,
     text_col: str = "text",
     threshold: float = 0.5,
-    max_iter: int | None = None,
     n: int = 3,
     num_hashes: int = 64,
     band_size: int = 4,
@@ -1332,11 +1324,11 @@ def near_dup_clusters(
     edge-touching vertices — an isolated doc keeps its own label by
     construction and re-attaches with label = doc_id in the final
     projection-join, so propagation never touches the corpus.
-    `max_iter=None` (default) runs to FIXPOINT — a hard cap could leave
-    a long-chain component mislabeled and diverge from the oracle's
-    exact transitive closure (ADVICE r2); the no-op-round early exit
-    terminates in O(log diameter) rounds, with a large safety bound
-    against pathological inputs.
+    Labeling always runs to FIXPOINT — a round cap could leave a
+    long-chain component with several labels per doc and diverge from
+    the oracle's exact transitive closure (ADVICE r2); the no-op-round
+    early exit terminates in O(log diameter) rounds, with a large
+    safety bound against pathological inputs.
 
     This is the grouping step of corpus dedup: keep one doc per cluster
     (label == doc_id) instead of dropping both ends of every pair.
@@ -1356,7 +1348,7 @@ def near_dup_clusters(
     # the verified pair list is O(dup subgraph), orders of magnitude
     # smaller than the corpus, so the star rounds run over executor
     # caches with broadcast helper joins below the state threshold.
-    labels, n_edges = _cc_labels(pairs, max_rounds=max_iter)
+    labels, n_edges = _cc_labels(pairs)
     if labels is None:  # edgeless graph: every doc is its own cluster
         return docs.select(
             "doc_id", F.col("doc_id").alias("cluster_id")
@@ -1377,11 +1369,10 @@ def dedupe_near(
     docs: DataFrame,
     text_col: str = "text",
     threshold: float = 0.5,
-    max_iter: int | None = None,
 ) -> DataFrame:
     """Near-dedup keep-set: one doc (the cluster's min doc_id) per
     near-dup cluster."""
-    clusters = near_dup_clusters(docs, text_col, threshold, max_iter)
+    clusters = near_dup_clusters(docs, text_col, threshold)
     return clusters.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
 
 

@@ -63,7 +63,8 @@ DIAGNOSTIC_ORACLES: dict[str, str] = {}
 # Plan-build memo (r16, VERDICT r15 #7): the ~150-entry tail's per-rep
 # wall is dominated by the DRIVER — rebuilding an identical py4j
 # expression tree and re-analyzing it on every call, not by execution
-# (scripts/probe_breakdown.py). For entries whose build is PURE in
+# (the build/analyze/plan/exec split of `perfbench/run.py --trace 1`,
+# read on one QueryExecution). For entries whose build is PURE in
 # (spark, sf_dir) — no Spark action, no persist, no session/catalog/
 # artifact mutation during construction — the UNRESOLVED PLAN is
 # metadata, exactly like the schema memo in sources/parquet.py: the

@@ -80,7 +80,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
     """Run a streaming plan to completion (availableNow) into a memory
-    sink and hand back the materialized table.
+    sink and hand back the materialized table (its temp view dropped).
 
     State partitions are pinned low (8) for the drain: every stateful
     operator commits one state store PER shuffle partition PER batch,
@@ -104,7 +104,11 @@ def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    # the resolved frame keeps the sink's rows; the catalog name would
+    # only pin them in driver memory for the rest of the session
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(

@@ -5,14 +5,14 @@ sf3->sf10 super-linearity of `exact_dup_groups`, `simhash`,
 onset (plans identical across tiers) — this script replaces that
 inference with measured counters.
 
-Per entry and tier it runs the query once (cold) and records, via the
-Spark UI REST API (the same JSON the History Server serves — no
-sidecar, works on any cluster):
-  - memory/disk shuffle-spill bytes summed over the run's new stages
-  - executor JVM GC time delta (ManagementFactory GC MXBeans — the
-    whole point of the measurement is that executors ARE the driver
-    JVM in local mode, so driver-side beans see executor GC)
-  - executor run time summed over new stages
+Per entry and tier it runs the query once (cold) and records, via
+`perfbench.probe.StageMeter` (the in-process status store — no UI, no
+HTTP), over the stages the run created:
+  - disk shuffle-spill bytes
+  - task GC time (in local mode the executors ARE the driver JVM, so
+    this is the JVM's collection time under the query)
+  - executor run time
+  - shuffle write bytes
 
 Merges a "saturation_counters" block into BENCH_SCALE_SF10.json.
 
@@ -25,11 +25,12 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
+
+from perfbench.probe import StageMeter
 
 ENTRIES = [
     n
@@ -39,46 +40,23 @@ ENTRIES = [
     ).split(",")
     if n
 ]
-UI_PORT = 4055
-
-
-def gc_ms(spark) -> int:
-    beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
-    return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
-
-
-def stages(spark) -> dict[int, dict]:
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=30) as r:
-        data = json.load(r)
-    return {(s["stageId"], s["attemptId"]): s for s in data}
 
 
 def run_entry(spark, fn, sf_dir) -> dict:
     spark.catalog.clearCache()
-    before, gc0 = stages(spark), gc_ms(spark)
+    meter = StageMeter(spark)
+    start = meter.mark()
     t0 = time.perf_counter()
     n = fn(spark, sf_dir).count()
     wall = time.perf_counter() - t0
-    after, gc1 = stages(spark), gc_ms(spark)
-    new = [s for k, s in after.items() if k not in before]
+    c = meter.delta(start, meter.mark())
     return {
         "wall_sec": round(wall, 3),
         "rows": n,
-        "memory_spill_mb": round(
-            sum(s.get("memoryBytesSpilled", 0) for s in new) / 1e6, 1
-        ),
-        "disk_spill_mb": round(
-            sum(s.get("diskBytesSpilled", 0) for s in new) / 1e6, 1
-        ),
-        "gc_sec": round((gc1 - gc0) / 1e3, 2),
-        "executor_run_sec": round(
-            sum(s.get("executorRunTime", 0) for s in new) / 1e3, 1
-        ),
-        "shuffle_write_mb": round(
-            sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 1
-        ),
+        "disk_spill_mb": round(c["spill_mb"], 1),
+        "gc_sec": round(c["gc_s"], 2),
+        "executor_run_sec": round(c["task_s"], 1),
+        "shuffle_write_mb": round(c["shuffle_mb"], 1),
     }
 
 
@@ -122,10 +100,7 @@ def main() -> int:
         # so the counters describe the SAME memory envelope the sweep
         # numbers came from — the default 1g OOMs tfidf at sf10 anyway
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.retainedStages", "5000")
+        .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -159,7 +134,7 @@ def main() -> int:
         "default_parallelism": dp,
         "shuffle_partitions": sp,
         "dp_law_version": DP_LAW_VERSION,
-        "method": "UI REST stage sums (new stages per run) + GC MXBean delta; "
+        "method": "status-store stage sums (StageMeter, new stages per run); "
         "cold single run per tier, local[32]",
     }
     json.dump(blob, open(path, "w"), indent=1, sort_keys=True)

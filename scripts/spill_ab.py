@@ -33,7 +33,6 @@ LEGS = [
     {"spark.sql.shuffle.partitions": "128"},
     {"spark.sql.shuffle.partitions": "32", "spark.default.parallelism": "128"},
 ]
-UI_PORT = 4056
 
 
 def main() -> int:
@@ -41,16 +40,12 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else ".scaledata/sf30"
     import saturation_counters as SC
 
-    SC.UI_PORT = UI_PORT
     for i, confs in enumerate(LEGS, 1):
         b = (
             SparkSession.builder.master("local[32]")
             .appName(f"spill-ab-leg{i}")
             .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.port", str(UI_PORT))
-            .config("spark.ui.showConsoleProgress", "false")
-            .config("spark.ui.retainedStages", "5000")
+            .config("spark.ui.enabled", "false")
         )
         for k, v in confs.items():
             b = b.config(k, v)

@@ -22,11 +22,23 @@ the safety net for entries nobody pinned.
   an entry that sorts corpus-grain data must restructure (top-k →
   TakeOrderedAndProject, ranking → window) or be whitelisted here
   with a written justification.
+
+The same pass pins each entry's plan WORK: its ShuffleExchange and
+BroadcastExchange node counts must equal `tests/plan_pins.py`. Counts
+are machine-invariant, so this is the suite's performance guard — a
+dropped broadcast hint or an extra shuffle fails here with a per-entry
+`old → new` diff; wall-clock is only reported (bench.py sidecars).
+Each count is read on a fresh QueryExecution (`df.select("*")`), with
+auto-broadcast off for that one planning so only declared broadcasts
+count, and with caches cleared before and after every build — so a
+frame an earlier test executed (or a cache it left) cannot change it.
 """
 
 from __future__ import annotations
 
 import pytest
+
+from tests.plan_pins import EXCHANGE_PINS
 
 SF = "/root/testdata/sf0.001"
 
@@ -59,14 +71,49 @@ UDTF_PICKLE_OK = {
 }
 
 
-def test_registry_plans_have_no_scale_antipatterns(spark):
-    import __spark_entry__ as m
+def _reset(spark) -> None:
     from milan_telecom_etl__spark.caching import release_tracked
 
-    bad_python, cartesian, gsort = [], [], []
+    spark.catalog.clearCache()
+    release_tracked()
+
+
+def exchange_counts(spark, df) -> tuple[int, int]:
+    """(ShuffleExchange, BroadcastExchange) nodes in a fresh physical
+    plan of `df`, planned with auto-broadcast off."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    nodes = [ln.lstrip(" :+-") for ln in plan.splitlines()]
+    return (
+        sum(n.startswith("Exchange ") for n in nodes),
+        sum(n.startswith("BroadcastExchange ") for n in nodes),
+    )
+
+
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """One build per registry entry at SF: the physical plan string the
+    lint reads, and the exchange counts the pins compare."""
+    import __spark_entry__ as m
+
+    plans, work = {}, {}
     for name, fn in m.queries().items():
+        _reset(spark)
         df = fn(spark, SF)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        work[name] = exchange_counts(spark, df)
+        _reset(spark)
+    return plans, work
+
+
+def test_registry_plans_have_no_scale_antipatterns(registry_plans):
+    bad_python, cartesian, gsort = [], [], []
+    for name, plan in registry_plans[0].items():
         has_row_udf = any(
             "BatchEvalPython" in ln and "BatchEvalPythonUDTF" not in ln
             for ln in plan.splitlines()
@@ -78,8 +125,6 @@ def test_registry_plans_have_no_scale_antipatterns(spark):
             cartesian.append(name)
         if _detects_global_sort(plan) and name not in GLOBAL_SORT_OK:
             gsort.append(name)
-        spark.catalog.clearCache()
-        release_tracked()
     assert not bad_python, (
         "row-at-a-time Python serialization (use Arrow, or earn a "
         f"UDTF_PICKLE_OK line): {bad_python}"
@@ -91,6 +136,31 @@ def test_registry_plans_have_no_scale_antipatterns(spark):
         "global sort outside the aggregate-grain whitelist (top-k → "
         f"TakeOrderedAndProject, ranking → window, or whitelist): {gsort}"
     )
+
+
+def test_registry_exchange_counts_match_pins(registry_plans):
+    work = registry_plans[1]
+    moved = [
+        f"  {n}: {EXCHANGE_PINS.get(n, 'absent')} → {work.get(n, 'absent')}"
+        for n in sorted(set(work) | set(EXCHANGE_PINS))
+        if work.get(n) != EXCHANGE_PINS.get(n)
+    ]
+    assert not moved, (
+        "plan work moved — (shuffle, broadcast) exchanges, pin → now; "
+        "re-pin by hand in tests/plan_pins.py if the change is meant:\n"
+        + "\n".join(moved)
+    )
+
+
+def test_exchange_counts_see_a_dropped_broadcast(spark):
+    """The count the pins compare moves when a join loses its
+    broadcast hint: one BroadcastExchange becomes two shuffles."""
+    from pyspark.sql import functions as F
+
+    big = spark.range(1000).withColumn("k", F.col("id") % 10)
+    small = spark.range(10).withColumnRenamed("id", "k")
+    assert exchange_counts(spark, big.join(F.broadcast(small), "k")) == (0, 1)
+    assert exchange_counts(spark, big.join(small, "k")) == (2, 0)
 
 
 def _detects_global_sort(plan: str) -> bool:

@@ -225,8 +225,9 @@ def test_near_dup_edge_build_is_lsh_pruned(spark):
     # the edge substrate (checked banded above) is consumed through a
     # materialized label snapshot: the cluster output must be the tiny
     # label set broadcast back onto the corpus, not a re-derivation of
-    # the whole LSH lineage per consumer
-    clusters = D.near_dup_clusters(docs, threshold=0.5, max_iter=1)
+    # the whole LSH lineage per consumer (at this size the labels come
+    # from the single-task union-find's lazy localCheckpoint)
+    clusters = D.near_dup_clusters(docs, threshold=0.5)
     cplan = clusters._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" in cplan  # snapshotted labels, lineage truncated
     assert "broadcast" in cplan  # reattachment join broadcasts the labels

@@ -223,6 +223,21 @@ def test_streaming_curation_gate_matches_batch(spark):
     assert 0 < n_admitted < len(got), "gate should admit some and drop some"
 
 
+def test_drains_leave_no_sink_views(spark, sf_dir):
+    """Each availableNow drain's memory-sink view is dropped once its
+    frame is resolved: repeated calls must not pile `bt_*` tables (and
+    their rows) up in the session catalog, and every returned frame
+    still reads the drained rows after its view is gone."""
+    from milan_telecom_etl__spark.registry_streaming import (
+        q_streaming_rollup_batch,
+    )
+
+    frames = [q_streaming_rollup_batch(spark, sf_dir) for _ in range(3)]
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("bt_")]
+    rows = [sorted(map(tuple, f.collect())) for f in frames]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
 def test_streaming_containment_probe_flags_contained_arrival(spark, tmp_path):
     """An arriving doc fully contained in an index doc must surface as
     an ingest-time suspect (all its probes land in the container), and

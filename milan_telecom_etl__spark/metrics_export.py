@@ -2,7 +2,8 @@
 VERDICT r5 "missing" #1) — closes the gap with the reference's
 Prometheus + Grafana stack (reference `prometheus.yml:10-14`,
 `grafana/provisioning/dashboards/postgres-dashboard.json`) without any
-sidecar dependency: Observation/listener counters are rendered in the
+sidecar dependency: Observation counters (the loaders' LoadReport
+quality counters, any `df.observe` metrics) are rendered in the
 Prometheus text format (version 0.0.4), which every Prometheus server,
 agent, and Grafana datasource ingests natively.
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -162,43 +163,45 @@ def load_traffic(
         report.skipped = True
         return report
 
+    _load_observed_traffic(
+        raw,
+        lambda df: wh.write(df, "fact_traffic_milan", partition_by=["load_date"]),
+        report,
+    )
+    return report
+
+
+def _load_observed_traffic(
+    raw: DataFrame, write: Callable[[DataFrame], None], report: LoadReport
+) -> None:
+    """Cleanse raw traffic rows and `write` them, with the quality
+    counters riding the write job as Observation metrics (no extra
+    pass), then fill `report` from them."""
     obs = Observation("traffic_quality")
     ts = parse_timestamp("datetime")
+    bad_cell = ~F.col("CellID").between(CELL_ID_MIN, CELL_ID_MAX)
     counters = [
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(ts.isNull(), 1).otherwise(0)).alias("invalid_dates"),
-        F.sum(
-            F.when(~F.col("CellID").between(CELL_ID_MIN, CELL_ID_MAX), 1).otherwise(0)
-        ).alias("rejected_cells"),
+        F.sum(F.when(bad_cell, 1).otherwise(0)).alias("rejected_cells"),
+        # single OR-combined rejected counter: a row failing BOTH checks
+        # (unparseable datetime AND out-of-range cell) must subtract
+        # once, not twice (ADVICE r1) — the per-cause counters remain
+        # independent diagnostics and may overlap.
+        F.sum(F.when(ts.isNull() | bad_cell, 1).otherwise(0)).alias("rejected_any"),
     ]
     counters += [
         F.sum(F.when(F.col(m) < 0, 1).otherwise(0)).alias(f"neg_{m}")
         for m in TRAFFIC_METRICS
     ]
-    counters.append(
-        F.sum(
-            F.when(
-                ts.isNull() | ~F.col("CellID").between(CELL_ID_MIN, CELL_ID_MAX), 1
-            ).otherwise(0)
-        ).alias("rejected_any")
-    )
     observed = raw.observe(obs, *counters)
-
-    cleansed = cleanse_traffic(observed).withColumn(
-        "load_date", F.to_date(F.col("datetime"))
-    )
-    wh.write(cleansed, "fact_traffic_milan", partition_by=["load_date"])
+    write(cleanse_traffic(observed).withColumn("load_date", F.to_date(F.col("datetime"))))
 
     got = obs.get
     report.invalid_dates = int(got.get("invalid_dates") or 0)
     report.rejected_cells = int(got.get("rejected_cells") or 0)
     report.negatives = {m: int(got.get(f"neg_{m}") or 0) for m in TRAFFIC_METRICS}
-    # single OR-combined rejected counter: a row failing BOTH checks
-    # (unparseable datetime AND out-of-range cell) must subtract once,
-    # not twice (ADVICE r1) — the per-cause counters above remain
-    # independent diagnostics and may overlap.
     report.loaded_rows = int(got["n_raw"]) - int(got.get("rejected_any") or 0)
-    return report
 
 
 def load_mobility(
@@ -300,13 +303,12 @@ def load_traffic_incremental(
         return report
 
     raw = spark.read.csv(todo, header=True, schema=TRAFFIC_RAW)
-    obs = Observation("traffic_quality_inc")
-    observed = raw.observe(obs, F.count(F.lit(1)).alias("n_raw"))
-    cleansed = cleanse_traffic(observed).withColumn(
-        "load_date", F.to_date(F.col("datetime"))
-    )
-    cleansed.write.mode("append").partitionBy("load_date").parquet(
-        wh.path("fact_traffic_milan")
+    _load_observed_traffic(
+        raw,
+        lambda df: df.write.mode("append")
+        .partitionBy("load_date")
+        .parquet(wh.path("fact_traffic_milan")),
+        report,
     )
     # manifest append AFTER the data commit: a crash between the two
     # re-processes the last batch (at-least-once into an overwritable
@@ -314,7 +316,6 @@ def load_traffic_incremental(
     spark.createDataFrame([(f,) for f in todo], "path string").write.mode(
         "append"
     ).parquet(manifest_path)
-    report.loaded_rows = int(obs.get["n_raw"])
     return report
 
 

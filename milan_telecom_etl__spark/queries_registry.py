@@ -24,7 +24,10 @@ and plan pins are.
 
 from __future__ import annotations
 
+import functools
+import os
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +36,7 @@ from .operators.cleansing import apply_fixups, title_trim
 from .operators.constraints import check_audit, fk_enforce, fk_violations, pk_duplicates
 from .plans.queries import star_join_revenue, top_cells_events
 from .plans.views import hourly_events
-from .sources.parquet import load_table
+from .sources.parquet import _file_state_key, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -45,9 +48,7 @@ ORACLES: dict[str, str] = {}
 # sf3->sf10 decade). Set SPARK_GRAFT_FULL_EVALS=1 to register the full
 # twins for a calibration run (e.g. validating that a sampled estimate
 # tracks the full corpus on a new dataset).
-import os as _os
-
-FULL_EVALS = _os.environ.get("SPARK_GRAFT_FULL_EVALS", "") == "1"
+FULL_EVALS = os.environ.get("SPARK_GRAFT_FULL_EVALS", "") == "1"
 
 
 # Diagnostic (opt-in) entries always land here, whatever the env flag:
@@ -60,141 +61,34 @@ DIAGNOSTIC_ORACLES: dict[str, str] = {}
 
 
 # ---------------------------------------------------------------------------
-# Plan-build memo (r16, VERDICT r15 #7): the ~150-entry tail's per-rep
-# wall is dominated by the DRIVER — rebuilding an identical py4j
-# expression tree and re-analyzing it on every call, not by execution
-# (the build/analyze/plan/exec split of `perfbench/run.py --trace 1`,
-# read on one QueryExecution). For entries whose build is PURE in
-# (spark, sf_dir) — no Spark action, no persist, no session/catalog/
-# artifact mutation during construction — the UNRESOLVED PLAN is
-# metadata, exactly like the schema memo in sources/parquet.py: the
-# same DataFrame object can serve every rep, and every action on it
-# still computes from the parquet inputs. The memo therefore caches
-# DataFrame OBJECTS (plans), never results.
+# Plan-build memo (VERDICT r15 #7): the ~150-entry tail's per-rep wall
+# is dominated by the DRIVER — rebuilding an identical py4j expression
+# tree and re-analyzing it on every call, not by execution (the
+# build/analyze/plan/exec split of `perfbench/run.py --trace 1`, read
+# on one QueryExecution). For a build that is PURE in (spark, sf_dir),
+# the built DataFrame is metadata, exactly like the schema memo in
+# sources/parquet.py: the same object can serve every call, and every
+# action on it still computes from the parquet inputs. A memo-served
+# frame also keeps its QueryExecution, so AQE's final plan is reused.
+# The memo caches DataFrame OBJECTS (plans), never results.
 #
-# Three independent safeguards keep this strictly metadata:
-# - allowlist: only entries in PLAN_MEMO_ENTRIES (statically audited
-#   action/persist/artifact-free builds; store-backed serving /
-#   appendable / bucketed / temp-view entries are excluded wholesale
-#   because their plans pin file listings and catalog state the key
-#   below does not cover);
-# - runtime purity guard: every non-memoized build is watched — if it
-#   launched ANY Spark job, registered a cache entry, or tracked a
-#   persist, that build's DataFrame is NOT memoized (a mis-flagged
-#   entry degrades to exactly its old behavior). The probe repeats per
-#   call rather than branding the entry, because a FIRST build
-#   legitimately runs the one-off schema-inference job that
-#   sources/parquet.py then memoizes — the second build is pure;
-# - file-state key: the memo keys on (session, sf_dir, every file's
-#   mtime_ns+size under sf_dir) — a DataFrame pins the scan's file
-#   listing at analysis time, so ANY change under the data dir drops
-#   the plan (the appendable-table lesson, same key discipline as
-#   sources/parquet._file_state_key).
-_PLAN_MEMO: dict[tuple, tuple] = {}  # key -> (file_state, DataFrame)
-
-# Statically audited pure-build entries (r16; see the audit criteria
-# above). Deliberately EXCLUDED despite auditing pure: store-backed
-# entries (*_appendable, *_serving, bucketed_*) whose plans pin
-# artifact-warehouse file listings outside the sf_dir key, and
-# temp-view/SQL-front-door entries whose plans bind catalog state.
-PLAN_MEMO_ENTRIES: frozenset[str] = frozenset(
-    {
-        # queries_registry
-        "conform_names", "constraint_audit", "daily_user_activity",
-        "fk_orphan_audit", "hourly_pivot", "hourly_rollup", "pk_dup_audit",
-        "semi_join_filter", "star_join_revenue", "top_cells", "topk_per_group",
-        # registry_analytics
-        "approx_percentile_bracket", "asof_last_click", "burst_pairs",
-        "cohort_retention", "cube_type_hour", "event_type_profile",
-        "fuzzy_supplier_pairs", "grouping_sets_revenue", "market_basket_rules",
-        "pareto_frontier_parts", "price_deciles", "price_percentiles",
-        "price_rank_profile", "profile_orders", "quantity_price_correlation",
-        "revenue_rollup", "session_window_builtin", "sessionize",
-        "set_ops_customers", "signup_purchase_funnel", "snapshot_diff",
-        "value_histogram",
-        # registry_geo
-        "grid_envelope", "spatial_join_zones", "utm_reproject",
-        # registry_ml
-        "cluster_silhouette", "embedding_centroids", "kmeans_clusters",
-        "kmeans_estep", "knn_label_noise_audit", "l2_normalized_vectors",
-        "multimodal_decode_features", "multimodal_exact_dedup",
-        "multimodal_frames", "multimodal_resize",
-        # registry_quality
-        "benford_first_digit", "boilerplate_line_purge", "c4_line_filters",
-        "class_balance_entropy", "countmin_heavy_hitters", "domain_reweighting",
-        "expectations_report", "gopher_quality_flags", "gopher_repetition_flags",
-        "group_zscore", "heavy_hitters", "html_strip", "k_anonymity_audit",
-        "l_diversity_audit", "mad_outliers", "mutual_information_type_hour",
-        "probe_calibration", "psi_price_drift", "quality_linear_probe",
-        "quality_probe_eval", "quartile_bins", "revenue_share",
-        "salted_join_priority", "unpivot_measures", "url_filter_flags",
-        "zorder_keys",
-        # registry_sampling
-        "bootstrap_mean_ci", "context_packing", "corpus_mixing",
-        "deterministic_sample", "padding_waste_buckets",
-        # simhash_band_candidates_auto persists during BUILD (tracked
-        # cache) — the runtime guard refuses it anyway; kept off the
-        # list so the list states only true pure builds (r16 smoke)
-        "stratified_cap", "temperature_mixing",
-        "train_val_test_split", "training_shards", "weighted_sample",
-        # registry_semistructured
-        "approx_distinct_users", "hll_partial_merge", "json_extract_props",
-        "json_k_histogram", "running_user_totals", "salted_type_totals",
-        "variant_props_stats",
-        # registry_series
-        "gap_percentiles", "regr_trend_pandas", "regr_value_trend",
-        "rolling_7d_active_users", "rolling_zscore_anomalies",
-        "sliding_window_counts", "time_weighted_avg", "user_gap_stats_arrow",
-        "wma_trailing",
-        # registry_similarity
-        "embedding_health_audit", "embedding_quantization_error",
-        "hard_negative_mining", "knn_bruteforce", "knn_ivf", "knn_ivf_pq",
-        "knn_lsh", "knn_lsh_multi", "knn_pq_adc", "lsh_bucket_audit",
-        "lsh_bucket_histogram", "matryoshka_eval", "rrf_hybrid_retrieval",
-        "semantic_decontamination",
-        # registry_temporal
-        "fuzzy_name_match", "gap_fill_hourly", "keep_latest_per_user",
-        "rolling_median", "scd2_user_state", "scd2_user_type_intervals",
-        "sliding_hour_avg", "transition_matrix", "user_top_type",
-        "user_type_set", "weekday_hour_profile",
-        # registry_text
-        # bm25_retrieval persists during build — see the
-        # simhash_band_candidates_auto note above
-        "bigram_counts", "bloom_decontamination",
-        "bpe_merge_candidates", "char_entropy_filter",
-        "contamination_overlap_ratio", "content_type_profile",
-        "decontamination_audit", "dedup_exact_keepers", "doc_fingerprint",
-        "dsir_weights", "exact_dup_groups", "exact_dup_groups_plain",
-        "importance_resampling", "lang_id", "memorization_attribution",
-        "minhash_lsh_candidates", "minhash_lsh_sharp", "minhash_signatures",
-        "passage_chunking", "pii_density", "quality_score",
-        "quality_threshold_by_source", "regex_redaction", "repetition_ratio",
-        "simhash", "t5_span_corruption", "text_stats", "tokenizer_fertility",
-        "winnowing_fingerprints",
-        # registry_tpch
-        "revenue_decimal_exact", "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4",
-        "tpch_q5", "tpch_q6", "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10",
-        "tpch_q11", "tpch_q12", "tpch_q13", "tpch_q14", "tpch_q15",
-        "tpch_q16", "tpch_q17", "tpch_q18", "tpch_q19", "tpch_q20",
-        "tpch_q22",
-    }
-)
-
-
-def _sf_state(sf_dir: str) -> tuple:
-    import os
-
-    entries = []
-    for root, dirs, files in os.walk(sf_dir):
-        dirs.sort()
-        for f in sorted(files):
-            p = os.path.join(root, f)
-            try:
-                st = os.stat(p)
-            except OSError:
-                continue
-            entries.append((p, st.st_mtime_ns, st.st_size))
-    return tuple(entries)
+# Eligibility is derived from what each build did, per call:
+# - purity: the build launched no Spark job, registered no cache entry
+#   and tracked no persist (`_build_is_pure`). A FIRST build may run
+#   the one-off schema-inference job that sources/parquet.py then
+#   memoizes, so the check repeats per call instead of branding the
+#   entry;
+# - inputs: every file of `df.inputFiles()` lies under sf_dir. Plans
+#   that read the artifact warehouse pin file listings outside it.
+# A kept frame is served while its key (name, sf_dir) and its state
+# still match. The state is the session's SQL confs plus
+# sources/parquet._file_state_key(sf_dir), taken after the build
+# because load_table pins confs on its first call: a conf flip (AQE,
+# broadcast threshold) or any rewritten input file rebuilds. The memo
+# holds frames of one applicationId only and is cleared when it
+# changes.
+_PLAN_MEMO: dict[tuple, tuple] = {}  # (name, sf_dir) -> (state, DataFrame)
+_plan_memo_app: str | None = None
 
 
 def _build_is_pure(spark: SparkSession, build: Callable[[], DataFrame]):
@@ -224,39 +118,31 @@ def _build_is_pure(spark: SparkSession, build: Callable[[], DataFrame]):
 
 def register(name: str, oracle: str | None = None, diagnostic: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        import functools
+        @functools.wraps(fn)
+        def reg_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            global _plan_memo_app
+            app = spark.sparkContext.applicationId
+            if app != _plan_memo_app:
+                _PLAN_MEMO.clear()
+                _plan_memo_app = app
 
-        if name in PLAN_MEMO_ENTRIES:
+            def state() -> tuple:
+                # one JVM round trip; spark.conf.getAll costs ~100x more
+                confs = spark._jsparkSession.sessionState().conf().getAllConfs()
+                return confs.toString(), _file_state_key(sf_dir)
 
-            @functools.wraps(fn)
-            def wrapped(
-                spark: SparkSession, sf_dir: str, _fn=fn, _name=name
-            ) -> DataFrame:
-                import os
+            key = (name, sf_dir)
+            hit = _PLAN_MEMO.get(key)
+            if hit is not None and hit[0] == state():
+                return hit[1]
+            df, pure = _build_is_pure(spark, lambda: fn(spark, sf_dir))
+            root = os.path.join(os.path.abspath(sf_dir), "")
+            if pure and all(
+                urlparse(f).path.startswith(root) for f in df.inputFiles()
+            ):
+                _PLAN_MEMO[key] = (state(), df)
+            return df
 
-                # kill switch — also how the A/B in OPTIMIZATION_r16.md
-                # measured the memo's contribution under identical code
-                if os.environ.get("SPARK_GRAFT_PLAN_MEMO", "1") == "0":
-                    return _fn(spark, sf_dir)
-                key = (
-                    _name,
-                    spark.sparkContext.applicationId,
-                    sf_dir,
-                )
-                state = _sf_state(sf_dir)
-                hit = _PLAN_MEMO.get(key)
-                if hit is not None and hit[0] == state:
-                    return hit[1]
-                df, pure = _build_is_pure(
-                    spark, lambda: _fn(spark, sf_dir)
-                )
-                if pure:
-                    _PLAN_MEMO[key] = (state, df)
-                return df
-
-            reg_fn = wrapped
-        else:
-            reg_fn = fn
         if diagnostic:
             DIAGNOSTIC_QUERIES[name] = reg_fn
             if oracle is not None:

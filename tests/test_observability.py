@@ -4,24 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from milan_telecom_etl__spark.listener import executor_snapshot, run_observed
-
-
-def test_observed_metrics_match_data(spark):
-    df = spark.range(0, 100).select(
-        "id", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id")).alias("v")
-    )
-    run = run_observed(df, value_col="v")
-    assert len(run.result) == 100
-    assert run.metrics["n_rows"] == 100
-    assert run.metrics["v_nulls"] == 10
-
-
-def test_executor_snapshot_shape(spark):
-    snap = executor_snapshot(spark)
-    assert snap["default_parallelism"] >= 1
-    assert "active_jobs" in snap and "active_stages" in snap
-
 
 def test_prometheus_exposition_format(tmp_path):
     """Counters render as valid Prometheus text exposition: TYPE line
@@ -54,14 +36,21 @@ def test_prometheus_exposition_format(tmp_path):
 
 
 def test_pipeline_metrics_roundtrip_through_exposition(spark):
-    """run_observed counters flow straight into the exporter."""
-    from milan_telecom_etl__spark.listener import run_observed
+    """Observation counters flow straight into the exporter."""
+    from pyspark.sql import Observation
+
     from milan_telecom_etl__spark.metrics_export import render_prometheus
 
     df = spark.range(100).withColumn(
         "v", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id"))
     )
-    run = run_observed(df, value_col="v")
-    text = render_prometheus(run.metrics, labels={"load": "unit"})
+    obs = Observation("load_metrics")
+    rows = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.col("v").isNull().cast("long")).alias("v_nulls"),
+    ).collect()
+    assert len(rows) == 100
+    text = render_prometheus(obs.get, labels={"load": "unit"})
     assert 'milan_etl_n_rows{load="unit"} 100' in text
     assert 'milan_etl_v_nulls{load="unit"} 10' in text

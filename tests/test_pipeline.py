@@ -160,14 +160,19 @@ def test_incremental_load_exactly_once_per_file(spark, tmp_path):
     # rerun with no new files → no-op
     r2 = load_traffic_incremental(wh, str(d))
     assert r2.skipped
-    # day 2 arrives → only day 2 ingested; day 1 not duplicated
+    # day 2 arrives → only day 2 ingested; day 1 not duplicated. The
+    # unparseable-date and out-of-range-cell rows are rejected, and the
+    # report counts them instead of the raw rows.
     (d / "sms-call-internet-mi-2013-11-02.csv").write_text(
         "datetime,CellID,countrycode,smsin,smsout,callin,callout,internet\n"
         "2013-11-02 00:00:00,2,39,2.0,2.0,2.0,2.0,2.0\n"
         "2013-11-02 00:10:00,3,39,3.0,3.0,3.0,3.0,3.0\n"
+        "not-a-date,4,39,4.0,4.0,4.0,4.0,4.0\n"
+        "2013-11-02 00:20:00,10000,39,5.0,5.0,5.0,5.0,5.0\n"
     )
     r3 = load_traffic_incremental(wh, str(d))
     assert r3.loaded_rows == 2
+    assert (r3.invalid_dates, r3.rejected_cells) == (1, 1)
     fact = spark.read.parquet(wh.path("fact_traffic_milan"))
     assert fact.count() == 3
     import os as _os

@@ -4,19 +4,34 @@ SURVEY.md §4.2 maps the reference's B-tree indexes
 (`src/database.py:115-117`: idx_traffic_time / idx_traffic_cell /
 idx_traffic_composite) onto partitioning + bucketing. Partition
 pruning has standing plan pins (P6); this module closes the other
-half: a build-once BUCKETED copy of a fact table, hash-clustered and
-sorted on its join key, so that every later join or aggregation ON
-THAT KEY is exchange-free — the per-query shuffle of the largest
-table is paid once at ingest, exactly like building the index.
+half: a build-once BUCKETED copy of a fact table (or of a derived
+projection of it), hash-clustered and sorted on its key, so that every
+later join or aggregation ON THAT KEY is exchange-free — the per-query
+shuffle of the largest table is paid once at ingest, exactly like
+building the index.
 
-Mechanics (and why they hold on a real cluster):
-- The bucketed copy is written with `bucketBy(n, key).sortBy(key)`
-  after a `repartition(n, key)`: Spark's bucket id is
-  `pmod(murmur3(key), n)` — the same hash family repartition uses —
-  so each write task holds exactly one bucket and emits ONE file per
-  bucket. One file per bucket lets the scan report per-bucket sort
-  order, so downstream sort-merge joins skip both the Exchange and
-  (on the scan side) the Sort.
+`appendable_bucketed_table` is the one bucketed store. When it
+rebuilds, appends or serves is `artifacts.refresh`'s rule, shared with
+every other standing artifact; this module adds only what is bucketed
+about it:
+
+- The copy is written with `bucketBy(n, key).sortBy(key)` after a
+  `repartition(n, key)`: Spark's bucket id is `pmod(murmur3(key), n)`
+  — the same hash family repartition uses — so each write task holds
+  exactly one bucket and a build emits ONE file per bucket. Growth
+  appends the new files' rows at the stored width: a bucket then
+  holds several files, and Spark still reads them as one task.
+- The width `n` is physical layout, stored in the manifest. An
+  explicit `n` that differs from it rebuilds at `n` (a join pair must
+  share one width or the sort-merge join gets an Exchange back); with
+  `n=None` the stored width serves until the corpus derives a width
+  WIDTH_MIGRATION_FACTOR times wider, then one rebuild migrates.
+- When not passed, `n` is derived from the corpus (`derived_n_buckets`):
+  the two-sided law SCALE.md measured at sf10 (7.03 s plain / 3.64 s
+  @16 / 2.09 s @64) — a bucket must stay a few hundred MB or less
+  (task/memory sizing), AND the bucket count must reach ~2× the
+  cluster parallelism once the data is big enough, because a bucketed
+  scan schedules ONE task per bucket.
 - Registration is catalog-based (`saveAsTable` external at a
   warehouse path). A FRESH session re-registers the existing files
   with `CREATE TABLE ... USING PARQUET CLUSTERED BY ... SORTED BY ...
@@ -24,15 +39,8 @@ Mechanics (and why they hold on a real cluster):
   the schema PERSISTED at build time (`_schema.json` beside
   `_SUCCESS`), never re-inferred from parquet footers (footer
   round-trip inference can drift from the catalog schema for
-  annotated types — ADVICE r12 #4).
-- The bucket count is derived from the corpus when not passed
-  (`derived_n_buckets`): the two-sided law SCALE.md measured at sf10
-  (7.03 s plain / 3.64 s @16 / 2.09 s @64) — a bucket must stay a few
-  hundred MB or less (task/memory sizing), AND the bucket count must
-  reach ~2× the cluster parallelism once the data is big enough,
-  because a bucketed scan schedules ONE task per bucket. `n` is part
-  of the table identity, so a width migration is a rebuild beside the
-  old layout, not an in-place mutation.
+  annotated types — ADVICE r12 #4); a corrupt sidecar falls back to
+  the footers rather than failing the entry forever.
 - At 100 TB the same statements run against an object store — every
   path is built with URI-aware joins (`fs_join`) and existence checks
   go through the Hadoop FileSystem, never os.path.
@@ -47,12 +55,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .artifacts import (
-    _fs_exists,
+    _hpath,
+    _read_text,
+    _write_text,
     artifact_root,
     canon_path,
-    corpus_fingerprint,
     fs_join,
     loc_key,
+    read_files,
+    refresh,
 )
 from .sources.parquet import adapt_table, load_table
 
@@ -89,9 +100,7 @@ def _derive_n(nbytes: int, parallelism: int) -> int:
 def _table_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Total input bytes of the source table, through the Hadoop
     FileSystem (works for local dirs and object stores alike)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(fs_join(sf_dir, f"{table}.parquet"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    p, fs = _hpath(spark, fs_join(sf_dir, f"{table}.parquet"))
     return int(fs.getContentSummary(p).getLength())
 
 
@@ -101,13 +110,13 @@ _DERIVED_N_MEMO: dict[tuple[str, str, float, int], int] = {}
 def derived_n_buckets(
     spark: SparkSession, sf_dir: str, table: str, size_fraction: float = 1.0
 ) -> int:
-    """Bucket count `bucketed_table` uses when `n` is not passed.
-    Memoized per (corpus location, table, fraction, parallelism): the
-    serving entries call this on every invocation, and the byte probe
-    is a recursive listing — O(#objects) LIST calls on an object
-    store. A corpus REPLACED under the same path mid-process keeps the
-    memoized width (fingerprint-keyed identity still rebuilds the
-    files; width drift on a same-order corpus is a pow2 no-op)."""
+    """Bucket count a build uses when `n` is not passed. Memoized per
+    (corpus location, table, fraction, parallelism): join pairs call
+    this on every invocation, and the byte probe is a recursive
+    listing — O(#objects) LIST calls on an object store. A corpus
+    REPLACED under the same path mid-process keeps the memoized width
+    (the manifest still rebuilds the files; width drift on a
+    same-order corpus is a pow2 no-op)."""
     key = (canon_path(sf_dir), table, size_fraction, spark.sparkContext.defaultParallelism)
     if key not in _DERIVED_N_MEMO:
         _DERIVED_N_MEMO[key] = _derive_n(
@@ -117,66 +126,46 @@ def derived_n_buckets(
     return _DERIVED_N_MEMO[key]
 
 
-def _table_name(
-    sf_dir: str, table: str, key: str, n: int, variant: str = ""
-) -> str:
-    # identity = (corpus location, corpus fingerprint, table, variant,
-    # key, n) PLUS the artifact root: the catalog entry is keyed by
-    # this NAME while the files live under the root, so a root change
-    # mid-session (e.g. a test monkeypatching SPARK_GRAFT_ARTIFACTS)
-    # must miss the catalog and rebuild instead of serving files under
-    # the old root (r12 review). n is identity too — two widths of the
-    # same table are two distinct physical layouts; `variant` tags a
-    # derived-column layout (a different derive fn must use a
-    # different variant).
+# Width-migration trigger: a layout keeps its creation-time bucket count
+# while the corpus grows (n is physical layout, appends must match it)
+# until the CURRENT corpus would derive a width this FACTOR wider (4x =
+# 2 pow2 steps) — then the next serve pays one full rebuild at the new
+# width instead of letting buckets grow without bound. 4x in derived
+# width ≈ buckets averaging ~4x TARGET_BUCKET_BYTES.
+WIDTH_MIGRATION_FACTOR = 4
+
+
+def layout_name(sf_dir: str, table: str, key: str, variant: str = "") -> str:
+    """Catalog name (and directory name) of a bucketed layout:
+    (corpus location, table, variant, key) PLUS the artifact root — the
+    catalog entry is keyed by this NAME while the files live under the
+    root, so a root change mid-session (e.g. a test monkeypatching
+    SPARK_GRAFT_ARTIFACTS) must miss the catalog instead of serving
+    files under the old root (r12 review). `variant` tags a
+    derived-column layout (a different derive fn must use a different
+    variant)."""
     loc = loc_key(sf_dir, extra=canon_path(artifact_root()))
     var = f"_{variant}" if variant else ""
-    return f"bkt_{loc}_{corpus_fingerprint(sf_dir, table)}_{table}{var}_{key}_{n}"
+    return f"bkta_{loc}_{table}{var}_{key}"
 
 
-def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    # whole-or-absent: write a temp sibling then rename. This runs
-    # AFTER _SUCCESS exists, so a job killed mid-write must not leave a
-    # truncated file that poisons every future fresh-session
-    # re-registration (ADVICE r13 #2); HDFS/local rename is atomic.
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + "._tmp")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(tmp, True)
-    try:
-        out.write(text.encode("utf-8"))
-    finally:
-        out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    fs.rename(tmp, p)
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, False)
-
-
-def _read_text(spark: SparkSession, path: str) -> str | None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return str(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
-    finally:
-        stream.close()
-
-
-def _register_ddl(
-    spark: SparkSession, name: str, schema: T.StructType, key: str, n: int, path: str
+def _register(
+    spark: SparkSession, name: str, path: str, key: str, n: int
 ) -> None:
+    """Metadata-only catalog registration of existing bucketed files,
+    from the persisted `_schema.json` (footer inference only when the
+    sidecar is missing or corrupt)."""
+    if spark.catalog.tableExists(name):
+        return
+    schema = None
+    persisted = _read_text(spark, fs_join(path, "_schema.json"))
+    if persisted is not None:
+        try:
+            schema = T.StructType.fromJson(json.loads(persisted))
+        except (ValueError, KeyError, TypeError):
+            schema = None  # truncated/corrupt sidecar
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
     )
@@ -185,140 +174,6 @@ def _register_ddl(
         f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {n} BUCKETS "
         f"LOCATION '{path}'"
     )
-
-
-def bucketed_table(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key: str,
-    n: int | None = None,
-    derive=None,
-    variant: str = "",
-    size_fraction: float = 1.0,
-) -> DataFrame:
-    """Return `table` as a catalog-registered bucketed table clustered
-    and sorted on `key`, building the bucketed copy exactly once per
-    (corpus, fingerprint) and re-registering existing files
-    metadata-only in fresh sessions. When `n` is not passed it is
-    derived from the corpus size and cluster parallelism
-    (`derived_n_buckets` — the SCALE.md sizing law as code).
-
-    `derive` (with a mandatory `variant` identity tag) transforms the
-    source frame before bucketing — the standing-index posture for a
-    COMPUTED key: e.g. project documents to (doc_id, fingerprint) and
-    cluster on the fingerprint, so every later dedup-family query on
-    that key is exchange-free, exactly like the reference's B-tree
-    over a computed column. `derive` must be deterministic: the build
-    runs once per corpus fingerprint and is served from files
-    thereafter.
-
-    `size_fraction` scales the byte estimate the width derivation
-    sees: a derived layout is often a narrow PROJECTION of the source
-    (the fingerprint index is ~50 bytes/row of multi-KB documents), so
-    sizing its buckets on source bytes would at 100 TB produce
-    hundreds of thousands of near-empty files — the caller states the
-    projection's expected size as a fraction of the source and the
-    sizing law applies to THAT."""
-    if derive is not None and not variant:
-        raise ValueError("derive requires a variant identity tag")
-    if n is None:
-        n = derived_n_buckets(spark, sf_dir, table, size_fraction)
-    name = _table_name(sf_dir, table, key, n, variant)
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
-    path = fs_join(artifact_root(), "bucketed", name)
-    if _fs_exists(spark, path):
-        persisted = _read_text(spark, fs_join(path, "_schema.json"))
-        schema = None
-        if persisted is not None:
-            try:
-                schema = T.StructType.fromJson(json.loads(persisted))
-            except (ValueError, KeyError, TypeError):
-                # truncated/corrupt sidecar (writer killed mid-write on
-                # a pre-atomic build): footer inference still serves
-                # the table rather than failing the entry forever
-                schema = None
-        if schema is None:  # pre-schema-file build or corrupt sidecar
-            schema = spark.read.parquet(path).schema
-        _register_ddl(spark, name, schema, key, n, path)
-    else:
-        src = load_table(spark, sf_dir, table)
-        if derive is not None:
-            src = derive(src)
-        (
-            src
-            .repartition(n, key)
-            .write.bucketBy(n, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        # persist the exact catalog schema beside the committer marker
-        # so fresh-session re-registration never re-infers (ADVICE r12)
-        _write_text(
-            spark,
-            fs_join(path, "_schema.json"),
-            json.dumps(spark.table(name).schema.jsonValue()),
-        )
-    return spark.table(name)
-
-
-# ---------------------------------------------------------------------------
-# Append-only standing index (VERDICT r13 #5)
-# ---------------------------------------------------------------------------
-
-# Width-migration trigger: an appendable layout keeps its creation-time
-# bucket count while the corpus grows (n is physical layout, appends
-# must match it) until the CURRENT corpus would derive a width this
-# FACTOR wider (4x = 2 pow2 steps) — then the next serve pays one full
-# rebuild at the new width instead of letting buckets grow without
-# bound. 4x in derived width ≈ buckets averaging ~4x
-# TARGET_BUCKET_BYTES.
-WIDTH_MIGRATION_FACTOR = 4
-
-
-def _corpus_files(
-    spark: SparkSession, sf_dir: str, table: str
-) -> dict[str, list[int]]:
-    """name -> [size, mtime_ms] for every data file of the source
-    table, through the Hadoop FileSystem (local dir, single file, or
-    object-store prefix alike). The appendable index's change
-    detector: a NEW name is an appendable shard; a changed/vanished
-    name breaks append-only identity and forces a rebuild."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(fs_join(sf_dir, f"{table}.parquet"))
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    st = fs.getFileStatus(p)
-    if st.isFile():
-        return {p.getName(): [int(st.getLen()), int(st.getModificationTime())]}
-    out: dict[str, list[int]] = {}
-    for s in fs.listStatus(p):
-        name = s.getPath().getName()
-        if s.isFile() and not name.startswith((".", "_")):
-            out[name] = [int(s.getLen()), int(s.getModificationTime())]
-    return out
-
-
-def append_plan(
-    known: dict[str, list[int]] | None, current: dict[str, list[int]]
-) -> tuple[str, list[str]]:
-    """The append-only state machine, as a pure decision: given the
-    manifest's per-file metadata (None = no/corrupt manifest) and the
-    corpus's current files, return ('rebuild'|'append'|'serve',
-    new_files). Shared by the bucketed index and the sketch-partials
-    store so the two write paths can't drift on WHEN to rebuild."""
-    if known is None:
-        return "rebuild", []
-    mutated = any(
-        fname not in current or current[fname] != meta
-        for fname, meta in known.items()
-    )
-    if mutated:
-        return "rebuild", []
-    new_files = sorted(set(current) - set(known))
-    return ("append", new_files) if new_files else ("serve", [])
 
 
 def appendable_bucketed_table(
@@ -331,116 +186,49 @@ def appendable_bucketed_table(
     variant: str = "",
     size_fraction: float = 1.0,
 ) -> DataFrame:
-    """The append-only refresh posture for a standing bucketed index
-    (VERDICT r13 #5). `bucketed_table` keys its identity on a corpus
-    FINGERPRINT, so any corpus change — including pure growth — pays a
-    whole-history rewrite. At 100 TB the corpus only ever GROWS (new
-    parquet files land under the table prefix per ingest batch), so
-    this variant keys identity on the LAYOUT (location, table, variant,
-    key) and tracks content per source FILE in a `_shards.json`
-    manifest beside the data:
-
-    - first serve: build from all current files, record them;
-    - corpus grew (manifest ⊂ current): read ONLY the new files,
-      derive, and `bucketBy(n).mode("append")` them into the SAME
-      catalog table — history files are untouched, the delta pays one
-      shuffle of ITS rows into the standing width;
-    - a manifest file changed or vanished (not append-only growth), or
-      the corpus outgrew the creation width by WIDTH_MIGRATION_FACTOR
-      pow2 steps: full rebuild at the freshly derived width.
+    """Return `table` as a catalog-registered bucketed table clustered
+    and sorted on `key`, kept current by `artifacts.refresh`: built
+    once, re-registered metadata-only in fresh sessions, and on corpus
+    GROWTH extended by bucketing ONLY the new files into the stored
+    width (`bucketBy(n).mode("append")` into the same catalog table —
+    history files untouched, the delta pays one shuffle of ITS rows).
+    A changed or vanished source file rebuilds.
 
     Reads serve the union (old buckets + delta files) as ONE bucketed
     scan: Spark groups a bucket's files across appends into one task,
-    so aggregations and joins on `key` stay Exchange-free — the same
-    zero-shuffle contract as `bucketed_table`, minus the per-file sort
-    guarantee (appended buckets hold >1 file, so downstream sorts are
-    the optimizer's call again; the dedup family needs only the hash
-    clustering). The bucket count is pinned at creation in the
-    manifest — appends must match the physical layout — and the width
-    sizing law re-enters only through the migration rebuild.
+    so aggregations and joins on `key` stay Exchange-free.
 
-    Delta batches pass through `sources.parquet.adapt_table` — the same
-    per-table physical-type normalization the rebuild path gets via
-    `load_table` — so tables needing loader adaptation (events
-    ns->timestamp) append rows type-identical to the standing index
-    (ADVICE r14)."""
+    `derive` (with a mandatory `variant` identity tag) transforms the
+    source frame before bucketing — the standing-index posture for a
+    COMPUTED key: e.g. project documents to (doc_id, fingerprint) and
+    cluster on the fingerprint, exactly like the reference's B-tree
+    over a computed column. `derive` must be deterministic and
+    row-local: appends run it over the delta files only. Delta batches
+    pass through `sources.parquet.adapt_table` — the per-table
+    physical-type normalization the rebuild path gets via `load_table`
+    — so tables needing it (events ns->timestamp) append rows
+    type-identical to the standing index (ADVICE r14).
+
+    `n`: see the module docstring (explicit width rebuilds on a
+    mismatch; None keeps the stored width until migration).
+    `size_fraction` scales the byte estimate the width derivation
+    sees: a derived layout is often a narrow PROJECTION of the source
+    (the fingerprint index is ~50 bytes/row of multi-KB documents), so
+    sizing its buckets on source bytes would at 100 TB produce
+    hundreds of thousands of near-empty files — the caller states the
+    projection's expected size as a fraction of the source."""
     if derive is not None and not variant:
         raise ValueError("derive requires a variant identity tag")
-    loc = loc_key(sf_dir, extra=canon_path(artifact_root()))
-    var = f"_{variant}" if variant else ""
-    name = f"bkta_{loc}_{table}{var}_{key}"
+    name = layout_name(sf_dir, table, key, variant)
     path = fs_join(artifact_root(), "bucketed", name)
-    manifest_path = fs_join(path, "_shards.json")
-    current = _corpus_files(spark, sf_dir, table)
+    migrate_to: list[int] = []
 
-    manifest = None
-    if _fs_exists(spark, path):
-        raw = _read_text(spark, manifest_path)
-        if raw is not None:
-            try:
-                manifest = json.loads(raw)
-                int(manifest["n"])
-                dict(manifest["files"])
-            except (ValueError, KeyError, TypeError):
-                manifest = None  # corrupt/truncated: rebuild below
-
-    def _register(n_buckets: int) -> None:
-        if spark.catalog.tableExists(name):
-            return
-        persisted = _read_text(spark, fs_join(path, "_schema.json"))
-        schema = None
-        if persisted is not None:
-            try:
-                schema = T.StructType.fromJson(json.loads(persisted))
-            except (ValueError, KeyError, TypeError):
-                schema = None
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-        _register_ddl(spark, name, schema, key, n_buckets, path)
-
-    def _rebuild(n_override: int | None = None) -> DataFrame:
-        n_new = n if n is not None else (
-            n_override
-            or derived_n_buckets(spark, sf_dir, table, size_fraction)
-        )
-        src = load_table(spark, sf_dir, table)
-        if derive is not None:
-            src = derive(src)
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        (
-            src.repartition(n_new, key)
-            .write.bucketBy(n_new, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        _write_text(
-            spark,
-            fs_join(path, "_schema.json"),
-            json.dumps(spark.table(name).schema.jsonValue()),
-        )
-        _write_text(
-            spark, manifest_path, json.dumps({"n": n_new, "files": current})
-        )
-        return spark.table(name)
-
-    if manifest is None:
-        return _rebuild()
-
-    n_built = int(manifest["n"])
-    action, new_files = append_plan(manifest["files"], current)
-    if action == "rebuild":
-        return _rebuild()
-    # crash-safety: an append is (data job commit, manifest rename) —
-    # two steps with no transaction between them. The pending marker
-    # brackets them: if a previous process died inside the bracket,
-    # delta rows may be committed but unrecorded, and re-appending
-    # would double-count them — rebuild instead (whole-or-rebuild).
-    pending = fs_join(path, "_append_pending")
-    if _read_text(spark, pending) is not None:
-        return _rebuild()
-    if n is None:
+    def stale(manifest: dict) -> bool:
+        built = manifest.get("n")
+        if not isinstance(built, int):
+            return True
+        if n is not None:
+            return built != n
         # FRESH byte probe, deliberately bypassing derived_n_buckets's
         # process-lifetime memo: the migration trigger exists precisely
         # for a long-lived ingest process whose corpus grows under the
@@ -450,31 +238,40 @@ def appendable_bucketed_table(
             max(1, int(_table_bytes(spark, sf_dir, table) * size_fraction)),
             spark.sparkContext.defaultParallelism,
         )
-        if n_now >= n_built * WIDTH_MIGRATION_FACTOR:
-            return _rebuild(n_now)  # width migration: deliberate, not drift
-    _register(n_built)
-    if new_files:
-        _write_text(spark, pending, json.dumps(new_files))
-        base = fs_join(sf_dir, f"{table}.parquet")
-        # the delta must see the SAME per-table physical-type
-        # normalization the rebuild path gets via load_table (ADVICE
-        # r14: for a table needing adaptation — events ns->timestamp —
-        # raw reads would silently diverge from, or implicitly cast
-        # against, the standing index built from adapted rows)
-        delta = adapt_table(
-            spark.read.parquet(*[fs_join(base, f) for f in new_files]), table
-        )
+        if n_now >= built * WIDTH_MIGRATION_FACTOR:
+            migrate_to.append(n_now)
+            return True
+        return False
+
+    def write(src: DataFrame, width: int, mode: str) -> None:
         if derive is not None:
-            delta = derive(delta)
-        (
-            delta.repartition(n_built, key)
-            .write.bucketBy(n_built, key)
-            .sortBy(key)
-            .mode("append")
-            .saveAsTable(name)
+            src = derive(src)
+        writer = src.repartition(width, key).write.bucketBy(width, key).sortBy(key)
+        if mode == "overwrite":
+            writer = writer.option("path", path)
+        writer.mode(mode).saveAsTable(name)
+
+    def rebuild() -> dict:
+        width = n or (
+            migrate_to[0] if migrate_to
+            else derived_n_buckets(spark, sf_dir, table, size_fraction)
         )
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+        write(load_table(spark, sf_dir, table), width, "overwrite")
+        # persist the exact catalog schema beside the committer marker
+        # so fresh-session re-registration never re-infers (ADVICE r12)
         _write_text(
-            spark, manifest_path, json.dumps({"n": n_built, "files": current})
+            spark,
+            fs_join(path, "_schema.json"),
+            json.dumps(spark.table(name).schema.jsonValue()),
         )
-        _fs_delete(spark, pending)
+        return {"n": width}
+
+    def append(new_files: list[str], manifest: dict) -> None:
+        _register(spark, name, path, key, manifest["n"])
+        delta = adapt_table(read_files(spark, sf_dir, table, new_files), table)
+        write(delta, manifest["n"], "append")
+
+    manifest = refresh(spark, sf_dir, table, path, rebuild, append, stale)
+    _register(spark, name, path, key, manifest["n"])
     return spark.table(name)

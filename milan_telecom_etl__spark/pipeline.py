@@ -227,13 +227,19 @@ def load_mobility(
         F.count(F.lit(1)).alias("n_raw"),
         F.sum(F.when(ts.isNull(), 1).otherwise(0)).alias("invalid_dates"),
     )
-    cleansed = cleanse_mobility(observed, provinces).withColumn(
-        "load_date", F.to_date(F.col("datetime"))
+    # counted after the province semi-join, inside the write job: no
+    # re-read of the table just written
+    loaded = Observation("mobility_loaded")
+    cleansed = cleanse_mobility(observed, provinces).observe(
+        loaded, F.count(F.lit(1)).alias("n_loaded")
     )
-    wh.write(cleansed, "fact_mobility_provinces", partition_by=["load_date"])
-    got = obs.get
-    report.invalid_dates = int(got.get("invalid_dates") or 0)
-    report.loaded_rows = wh.spark.read.parquet(wh.path("fact_mobility_provinces")).count()
+    wh.write(
+        cleansed.withColumn("load_date", F.to_date(F.col("datetime"))),
+        "fact_mobility_provinces",
+        partition_by=["load_date"],
+    )
+    report.invalid_dates = int(obs.get.get("invalid_dates") or 0)
+    report.loaded_rows = int(loaded.get["n_loaded"])
     return report
 
 

@@ -1128,9 +1128,9 @@ def q_bucketed_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics are exactly `sessionize`'s 30-minute gap rule; output is
     the top-20 users by session count (deterministic user_id
     tiebreak)."""
-    from .bucketed import bucketed_table
+    from .bucketed import appendable_bucketed_table
 
-    ev = bucketed_table(spark, sf_dir, "events", "user_id")
+    ev = appendable_bucketed_table(spark, sf_dir, "events", "user_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     new_s = _new_session_flag(w)
     s = ev.select(

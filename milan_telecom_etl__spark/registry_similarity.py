@@ -516,7 +516,7 @@ def q_knn_ivf_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact discipline applied to the ANN north star): the corpus
     cell-assignment table — the |corpus| x |seeds| E-step that
     dominates train-in-run cost — is a warehouse-parquet artifact
-    (artifacts.py, keyed on the embeddings table's fingerprint), and
+    (artifacts.py, rebuilt when the embeddings table's files change), and
     probe time computes distances only for the 5 query vectors.
     Identical output to `knn_ivf` (same oracle — the artifact rows ARE
     the inline form's cell frame). The production shape: index built

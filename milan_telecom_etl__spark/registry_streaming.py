@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries_registry import register
+from .streaming.ingest import _drain
 
 _EVENTS_STREAM_SCHEMA = (
     "event_id long, ts {ts_type}, user_id long, event_type string, value double, props string"
@@ -76,39 +77,6 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_is_long:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
-
-
-def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
-    """Run a streaming plan to completion (availableNow) into a memory
-    sink and hand back the materialized table (its temp view dropped).
-
-    State partitions are pinned low (8) for the drain: every stateful
-    operator commits one state store PER shuffle partition PER batch,
-    and at 32 partitions that fixed commit cost is ~4× the actual work
-    for a bounded single-batch drain. A production deployment of the
-    same plan sizes spark.sql.shuffle.partitions to stream throughput
-    instead — the knob is per-query-start, which is why it's set here
-    and restored after."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    name = f"bt_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # the resolved frame keeps the sink's rows; the catalog name would
-    # only pin them in driver memory for the rest of the session
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)
-    return out
 
 
 @register(
@@ -757,10 +725,11 @@ def _stream_fertility_sql(new_max_id: int = _PROBE_NEW_MAX_ID) -> str:
 def _standing_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STANDING tokenizer vocabulary as a warehouse-parquet
     artifact: (w, seq, freq) with all merges applied, trained on the
-    already-ingested corpus (doc_id >= batch boundary) exactly once
-    per corpus fingerprint and LOADED on every later invocation — the
-    shape a production pipeline actually runs (VERDICT r10 #2:
-    train-in-run was "honest measurement, wrong production posture")."""
+    already-ingested corpus (doc_id >= batch boundary) once per
+    corpus state (its files' manifest) and LOADED on every later
+    invocation — the shape a production pipeline actually runs
+    (VERDICT r10 #2: train-in-run was "honest measurement, wrong
+    production posture")."""
     from .artifacts import load_or_build
     from .operators.text import _bpe_train
     from .registry_text import BPE_MERGE_ROUNDS
@@ -914,7 +883,7 @@ def q_streaming_quality_probe_batch(
     rule stack: the exact-integer OLS probe (1 row of Cramer
     determinants — the Gram sufficient statistics the pipeline
     refreshes offline) is a warehouse-parquet artifact (trained once
-    per corpus fingerprint and LOADED here — see `artifacts.py`;
+    per corpus state and LOADED here — see `artifacts.py`;
     `streaming_quality_probe_train_batch` is the train-in-run twin),
     and every arriving doc is scored map-only under the broadcast
     1-row model (a constant-key stream-static equi-join — the

@@ -153,11 +153,16 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fingerprint_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing dedup index: documents projected to (doc_id,
     fingerprint) and BUCKETED on the fingerprint — built once per
-    corpus by `bucketed.bucketed_table` (derive + variant identity),
-    the reference's computed-column B-tree re-expressed as a
-    pay-the-shuffle-once layout. Every exact-dedup-family query on
-    the fingerprint key then runs without any Exchange."""
-    from .bucketed import bucketed_table
+    corpus by `bucketed.appendable_bucketed_table` (derive + variant
+    identity), which on corpus GROWTH buckets only the newly arrived
+    files into the standing width instead of rewriting history: the
+    reference's computed-column B-tree re-expressed as a
+    pay-the-shuffle-once layout. Every exact-dedup-family query on the
+    fingerprint key then runs without any Exchange; after an append
+    the union read (history buckets + delta files) is still one
+    bucketed scan (pinned equal to a full rebuild in
+    tests/test_plans.py)."""
+    from .bucketed import appendable_bucketed_table
 
     def derive(docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -166,8 +171,9 @@ def _fingerprint_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # size_fraction: the index is (int64, 32-char hash) ≈ 50 B/row of
     # multi-KB document rows — size its buckets on ITS bytes, not the
-    # corpus's (bucketed_table docstring; 1/32 is ~2x conservative)
-    return bucketed_table(
+    # corpus's (appendable_bucketed_table docstring; 1/32 is ~2x
+    # conservative)
+    return appendable_bucketed_table(
         spark,
         sf_dir,
         "documents",
@@ -178,14 +184,13 @@ def _fingerprint_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "exact_dup_groups",
-    f"""
+_EXACT_DUP_GROUPS_SQL = f"""
     SELECT md5({_norm()}) AS fingerprint,
            count(*) AS n_docs, min(doc_id) AS keeper_doc_id
     FROM documents GROUP BY 1 HAVING count(*) > 1
-    """,
-)
+    """
+
+
 def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-dup groups by normalized-content hash, SERVED from the
     standing bucketed fingerprint index (VERDICT r12 #4): the groupBy
@@ -194,7 +199,9 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 + shuffle cost that made exact dedup memory-bandwidth-bound at
     sf10 (SCALE.md saturation counters) is paid once at index build,
     not per query. `exact_dup_groups_plain` keeps the scan-and-shuffle
-    twin on the clock for measurement."""
+    twin on the clock for measurement. Registered twice: the index is
+    append-only on corpus growth, so `exact_dup_groups_appendable`
+    (VERDICT r13 #5) is this same builder under its own name."""
     idx = _fingerprint_index(spark, sf_dir)
     return (
         idx.groupBy("fingerprint")
@@ -203,14 +210,11 @@ def q_exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "exact_dup_groups_plain",
-    f"""
-    SELECT md5({_norm()}) AS fingerprint,
-           count(*) AS n_docs, min(doc_id) AS keeper_doc_id
-    FROM documents GROUP BY 1 HAVING count(*) > 1
-    """,
-)
+register("exact_dup_groups", _EXACT_DUP_GROUPS_SQL)(q_exact_dup_groups)
+register("exact_dup_groups_appendable", _EXACT_DUP_GROUPS_SQL)(q_exact_dup_groups)
+
+
+@register("exact_dup_groups_plain", _EXACT_DUP_GROUPS_SQL)
 def q_exact_dup_groups_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The measurement twin of `exact_dup_groups`: same semantics,
     computed from the raw documents scan (md5 + shuffle per query) —
@@ -236,50 +240,6 @@ def q_dedup_exact_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _fingerprint_index(spark, sf_dir)
     return idx.groupBy("fingerprint").agg(F.min("doc_id").alias("doc_id")).select(
         "doc_id"
-    )
-
-
-@register(
-    "exact_dup_groups_appendable",
-    f"""
-    SELECT md5({_norm()}) AS fingerprint,
-           count(*) AS n_docs, min(doc_id) AS keeper_doc_id
-    FROM documents GROUP BY 1 HAVING count(*) > 1
-    """,
-)
-def q_exact_dup_groups_appendable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-dup groups served from the APPEND-ONLY fingerprint index
-    (VERDICT r13 #5): same semantics and zero-Exchange serving plan as
-    `exact_dup_groups`, but the standing index refreshes on corpus
-    GROWTH by bucketing only the newly arrived files into the standing
-    width (`bucketed.appendable_bucketed_table`) instead of rewriting
-    history — the missing piece of the 100 TB ingest story, where the
-    corpus only ever grows and a fingerprint-keyed identity would pay
-    a whole-corpus rewrite per ingest batch. The union read (history
-    buckets + delta files) is one bucketed scan, so the groupBy still
-    rides the bucket partitioning with no Exchange (plan-pinned, and
-    pinned equal to a full rebuild after an append in
-    tests/test_plans.py)."""
-    from .bucketed import appendable_bucketed_table
-
-    def derive(docs: DataFrame) -> DataFrame:
-        return docs.select(
-            "doc_id", F.md5(X.normalize_text("text")).alias("fingerprint")
-        )
-
-    idx = appendable_bucketed_table(
-        spark,
-        sf_dir,
-        "documents",
-        "fingerprint",
-        derive=derive,
-        variant="fpidx",
-        size_fraction=1 / 32,
-    )
-    return (
-        idx.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keeper_doc_id"))
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -466,7 +426,7 @@ def q_incremental_dedup_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the r12 streaming-probe discipline applied to the dedup north
     star): the index side's banded MinHash signature table and its
     UNCAPPED shingle inverted index are warehouse-parquet artifacts
-    (artifacts.py — built once per corpus fingerprint by the offline
+    (artifacts.py — rebuilt whenever the corpus files change, by the offline
     index-refresh job `dedup_index_compaction` models), and only the
     arriving batch's signatures/shingles are computed at probe time.
     Identical output to `incremental_dedup` (same oracle; the df
@@ -567,7 +527,7 @@ def _shingles_n3(docs: DataFrame) -> DataFrame:
     """The appendable shingle store's derived projection: the UNCAPPED
     (doc_id, shingle) inverted-index rows — per-doc map-only, so
     append-only by construction. Uncapped for the same reason the
-    fingerprint-keyed artifact stores uncapped shingles: the df
+    `load_or_build` artifact stores uncapped shingles: the df
     stop-shingle cap must see the SERVE-TIME corpus frequencies."""
     return D.shingle_table(docs, n=3)
 

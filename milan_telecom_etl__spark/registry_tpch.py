@@ -1308,7 +1308,7 @@ def q_bucketed_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem and orders (both hash-clustered + sorted on orderkey into
     an auto-derived bucket count — the SCALE.md sizing law in
     `bucketed.derived_n_buckets` — built once per corpus by
-    `bucketed.bucketed_table`,
+    `bucketed.appendable_bucketed_table`,
     the Spark substitute for the reference's B-tree fact indexes,
     src/database.py:115-117). The entire plan is exchange-free:
     groupBy(l_orderkey) is satisfied by the lineitem scan's bucket
@@ -1319,7 +1319,7 @@ def q_bucketed_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay-the-shuffle-once-at-ingest posture: every orderkey-grain query
     after ingest reads co-located buckets and shuffles nothing.
     Plan-pinned in tests/test_plans.py (zero Exchange of any kind)."""
-    from .bucketed import bucketed_table, derived_n_buckets
+    from .bucketed import appendable_bucketed_table, derived_n_buckets
 
     # JOIN PAIRS MUST SHARE ONE WIDTH: Spark only removes the SMJ
     # exchange when both sides report the SAME bucket count (bucket
@@ -1327,8 +1327,8 @@ def q_bucketed_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem/orders different widths at most tiers (r13 review).
     # Size the pair on the LARGER side — the table the law exists for.
     n = derived_n_buckets(spark, sf_dir, "lineitem")
-    li = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey", n=n)
-    orders = bucketed_table(spark, sf_dir, "orders", "o_orderkey", n=n)
+    li = appendable_bucketed_table(spark, sf_dir, "lineitem", "l_orderkey", n=n)
+    orders = appendable_bucketed_table(spark, sf_dir, "orders", "o_orderkey", n=n)
     per_order = li.groupBy("l_orderkey").agg(
         F.round(F.sum(_rev_units()) / 10000.0, 4).alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),

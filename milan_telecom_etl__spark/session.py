@@ -142,10 +142,7 @@ def get_spark(
         # recompilation and C2 re-JIT — measured as a broad +5..20% tail
         # that grows with registry size (PLANS.md "r8 drift root cause").
         # Static conf, so it must be set before the first session.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         # The JVM's JIT code cache defaults to 240 MB; keeping thousands
         # of generated classes hot needs headroom or the JIT flushes /
         # stops compiling and everything degrades to interpreter speed.
@@ -158,8 +155,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             (
                 os.environ.get("SPARK_DRIVER_OPTS", "").strip() + " "
-                + "-XX:ReservedCodeCacheSize="
-                + os.environ.get("SPARK_GRAFT_CODE_CACHE", "1g")
+                + "-XX:ReservedCodeCacheSize=1g"
             ).strip(),
         )
         # driver-local testing niceties; harmless on a cluster

@@ -14,6 +14,8 @@ executor partition.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,17 +59,37 @@ def hourly_rollup_stream(raw_stream: DataFrame, watermark: str = "2 hours") -> D
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str = "hourly_stream") -> None:
-    """Drain the stream with availableNow (process-everything-then-stop)
-    into an in-memory table — the batch-equivalence test harness."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
+    """Run a streaming plan to completion (availableNow) into a memory
+    sink and hand back the materialized table (its temp view dropped).
+
+    State partitions are pinned low (8) for the drain: every stateful
+    operator commits one state store PER shuffle partition PER batch,
+    and at 32 partitions that fixed commit cost is ~4× the actual work
+    for a bounded single-batch drain. A production deployment of the
+    same plan sizes spark.sql.shuffle.partitions to stream throughput
+    instead — the knob is per-query-start, which is why it's set here
+    and restored after."""
+    spark = stream_df.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    name = f"bt_{uuid.uuid4().hex[:12]}"
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # the resolved frame keeps the sink's rows; the catalog name would
+    # only pin them in driver memory for the rest of the session
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def dedupe_stream(

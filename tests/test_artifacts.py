@@ -1,5 +1,5 @@
 """The standing-artifact warehouse (artifacts.py): build-once
-semantics, fingerprint-keyed staleness, and serving/train twin
+semantics, manifest-keyed rebuild in place, and serving/train twin
 equality for the two artifact-backed streaming entries."""
 
 import os
@@ -9,8 +9,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from milan_telecom_etl__spark.artifacts import (
+    _corpus_files,
     artifact_path,
-    corpus_fingerprint,
     load_or_build,
 )
 
@@ -44,20 +44,83 @@ def test_load_or_build_builds_exactly_once(spark, tmp_path, monkeypatch):
     assert sorted(r["v"] for r in a) == sorted(r["v"] for r in b) == [0, 1, 2]
 
 
-def test_corpus_change_rekeys_artifact(spark, tmp_path, monkeypatch):
-    """A corpus change under the same sf_dir must change the artifact
-    key (retrain-on-change), and the fingerprint of a missing corpus
-    degrades to the documented 'nofp' location-only key."""
+def test_corpus_change_rebuilds_artifact_in_place(spark, tmp_path, monkeypatch):
+    """A corpus rewritten under the same sf_dir rebuilds the artifact
+    at the SAME location (identity is the location; the manifest
+    records what it was built from), so no stale copy is left behind."""
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "wh"))
     sf = str(tmp_path / "sf")
     _write_corpus(spark, sf, 10)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.read.parquet(os.path.join(sf, "documents.parquet")).select(
+            F.count(F.lit(1)).alias("n")
+        )
+
     p1 = artifact_path(sf, "toy")
-    fp1 = corpus_fingerprint(sf)
-    time.sleep(0.01)  # mtime_ns tick
+    assert load_or_build(spark, sf, "toy", build).first()["n"] == 10
+    time.sleep(0.01)  # mtime tick
     _write_corpus(spark, sf, 11)
-    assert corpus_fingerprint(sf) != fp1
-    assert artifact_path(sf, "toy") != p1
-    assert corpus_fingerprint(str(tmp_path / "missing")) == "nofp"
+    assert load_or_build(spark, sf, "toy", build).first()["n"] == 11
+    assert len(calls) == 2
+    assert artifact_path(sf, "toy") == p1
+    assert os.listdir(str(tmp_path / "wh")) == [os.path.basename(os.path.dirname(p1))]
+    assert os.listdir(os.path.dirname(p1)) == ["toy"]
+
+
+def test_nested_partition_growth_refreshes_both_stores(spark, tmp_path, monkeypatch):
+    """A `key=value`-partitioned corpus: the manifest lists the nested
+    files (relative paths), so a file landing inside a partition dir
+    rebuilds a `load_or_build` artifact and appends to the bucketed
+    store, whose delta keeps its partition column."""
+    import glob
+    import shutil
+
+    from milan_telecom_etl__spark.bucketed import (
+        appendable_bucketed_table,
+        layout_name,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "wh"))
+    sf = str(tmp_path / "sf")
+    base = os.path.join(sf, "documents.parquet")
+
+    def docs(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("doc_id"), (F.col("id") % 2).cast("int").alias("part")
+        )
+
+    docs(0, 20).write.partitionBy("part").parquet(base)
+    assert _corpus_files(spark, sf, "documents")
+    assert all(f.startswith("part=") for f in _corpus_files(spark, sf, "documents"))
+
+    def count():
+        return spark.read.parquet(base).select(F.count(F.lit(1)).alias("n"))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("doc_id", "part").collect())
+
+    name = layout_name(sf, "documents", "doc_id")
+    ipath = os.path.join(str(tmp_path / "wh"), "bucketed", name)
+    idx = lambda: appendable_bucketed_table(spark, sf, "documents", "doc_id", n=2)  # noqa: E731
+    try:
+        assert load_or_build(spark, sf, "n_docs", count).first()["n"] == 20
+        idx()
+        stage = str(tmp_path / "stage")
+        docs(100, 105).drop("part").coalesce(1).write.parquet(stage)
+        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+        shutil.copy(part, os.path.join(base, "part=1", "delta-1.parquet"))
+
+        assert load_or_build(spark, sf, "n_docs", count).first()["n"] == 25
+        grown = idx()
+        assert rows(grown) == rows(spark.read.parquet(base))
+        assert (100, 1) in rows(grown)
+        # appended beside the two built buckets, not rebuilt
+        assert len([f for f in os.listdir(ipath) if f.startswith("part-")]) > 2
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
 
 
 def test_serving_entries_match_train_in_run_twins(spark):
@@ -160,7 +223,7 @@ def test_dedup_serving_df_cap_sees_union_frequencies(spark, tmp_path, monkeypatc
 def test_append_plan_decisions():
     # the shared append-only state machine (bucketed index + partials
     # store) — pure-function pins for every branch
-    from milan_telecom_etl__spark.bucketed import append_plan
+    from milan_telecom_etl__spark.artifacts import append_plan
 
     cur = {"a": [1, 2], "b": [3, 4]}
     assert append_plan(None, cur) == ("rebuild", [])          # no manifest

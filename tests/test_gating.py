@@ -202,9 +202,10 @@ def test_closure_fingerprint_sees_in_body_imports():
     )
     names2 = {(m, n) for m, n, _ in c2}
     assert ("artifacts", "load_or_append_partials") in names2
-    # and one hop further: the partials helper's own in-body import of
-    # the shared state machine rides along too
-    assert ("bucketed", "append_plan") in names2
+    # and one hop further: the shared refresh and its state machine
+    # ride along too
+    assert ("artifacts", "refresh") in names2
+    assert ("artifacts", "append_plan") in names2
 
 
 def test_unknown_gate_sha_promotes_conservatively(monkeypatch):

@@ -107,7 +107,7 @@ def test_traffic_cleansing_semantics(spark, warehouse):
 
 
 def test_mobility_cleansing_semantics(spark, warehouse):
-    wh, _ = warehouse
+    wh, reports = warehouse
     fact = spark.read.parquet(wh.path("fact_mobility_provinces"))
     rows = {r["provincia"]: r for r in fact.collect()}
     # fixups applied, whitespace trimmed, unmatched + bad rows dropped
@@ -115,6 +115,11 @@ def test_mobility_cleansing_semantics(spark, warehouse):
     assert rows["Milano"]["province2cell"] == 0.0  # null → 0
     # asymmetry preserved: mobility negatives are NOT clamped
     assert rows["Bolzano"]["cell2province"] == -2.0
+    # the report counts what was written: 7 raw rows less the bad date,
+    # the unknown province (ATLANTIS) and the out-of-range cell
+    report = reports["mobility"]
+    assert report.invalid_dates == 1
+    assert report.loaded_rows == fact.count() == 4
 
 
 def test_idempotent_rerun(spark, warehouse, data_dir):

@@ -729,7 +729,7 @@ def test_bucketed_order_revenue_is_exchange_free(spark):
     # the bucketed-warehouse demo's whole point: groupBy on the bucket
     # key, the orderkey SMJ, and the top-10 all run without ANY
     # exchange (no shuffle, no broadcast) — the shuffle was paid once
-    # at ingest by bucketed.bucketed_table.
+    # at ingest by bucketed.appendable_bucketed_table.
     import __spark_entry__ as m
 
     df = m.queries()["bucketed_order_revenue"](spark, SF)
@@ -744,15 +744,13 @@ def test_bucketed_table_reregisters_metadata_only(spark):
     # existing bucketed files via DDL — the scan must still report the
     # bucket spec (Bucketed: true path), not degrade to a plain scan.
     from milan_telecom_etl__spark.bucketed import (
-        bucketed_table,
-        derived_n_buckets,
-        _table_name,
+        appendable_bucketed_table,
+        layout_name,
     )
 
-    name = _table_name(SF, "orders", "o_orderkey", derived_n_buckets(spark, SF, "orders"))
-    bucketed_table(spark, SF, "orders", "o_orderkey")  # ensure built
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-    df = bucketed_table(spark, SF, "orders", "o_orderkey")
+    appendable_bucketed_table(spark, SF, "orders", "o_orderkey")  # ensure built
+    spark.sql(f"DROP TABLE IF EXISTS `{layout_name(SF, 'orders', 'o_orderkey')}`")
+    df = appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
     agg = df.groupBy("o_orderkey").count()
     assert "Exchange" not in _plan(agg)
 
@@ -770,20 +768,19 @@ def test_bucketed_user_sessions_is_exchange_free(spark):
 
 def test_bucketed_half_written_build_is_rebuilt(spark, tmp_path, monkeypatch):
     # a killed build leaves files without _SUCCESS: the loader must
-    # rebuild, never register the partial files (bucketed._fs_exists
-    # checks the committer marker, same contract as artifacts.py).
+    # rebuild, never register the partial files (artifacts.refresh
+    # checks the committer marker before it trusts a manifest).
     import os
     from milan_telecom_etl__spark import bucketed as B
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
-    n = B.derived_n_buckets(spark, SF, "nation")
-    name = B._table_name(SF, "nation", "n_nationkey", n)
+    name = B.layout_name(SF, "nation", "n_nationkey")
     path = os.path.join(str(tmp_path), "bucketed", name)
     os.makedirs(path)
     with open(os.path.join(path, "part-garbage.parquet"), "wb") as f:
         f.write(b"not parquet")
     try:
-        df = B.bucketed_table(spark, SF, "nation", "n_nationkey")
+        df = B.appendable_bucketed_table(spark, SF, "nation", "n_nationkey")
         assert df.count() > 0  # rebuilt (reading garbage would throw)
         assert os.path.exists(os.path.join(path, "_SUCCESS"))
     finally:
@@ -898,20 +895,18 @@ def test_bucketed_reregistration_never_reinfers_schema(spark, monkeypatch):
     # poison DataFrameReader.parquet and re-register anyway.
     import pyspark.sql.readwriter as RW
     from milan_telecom_etl__spark.bucketed import (
-        bucketed_table,
-        derived_n_buckets,
-        _table_name,
+        appendable_bucketed_table,
+        layout_name,
     )
 
-    built = bucketed_table(spark, SF, "orders", "o_orderkey")  # ensure built
-    name = _table_name(SF, "orders", "o_orderkey", derived_n_buckets(spark, SF, "orders"))
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+    built = appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
+    spark.sql(f"DROP TABLE IF EXISTS `{layout_name(SF, 'orders', 'o_orderkey')}`")
 
     def _boom(self, *a, **k):
         raise AssertionError("re-registration re-inferred schema from parquet")
 
     monkeypatch.setattr(RW.DataFrameReader, "parquet", _boom)
-    df = bucketed_table(spark, SF, "orders", "o_orderkey")
+    df = appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
     assert df.schema == built.schema
     assert "Exchange" not in _plan(df.groupBy("o_orderkey").count())
 
@@ -1271,15 +1266,47 @@ def test_appendable_index_rebuilds_on_mutation_pending_and_width(
             spark.sql(f"DROP TABLE IF EXISTS `{bdir}`")
 
 
+def test_appendable_explicit_width_change_rebuilds(spark, tmp_path, monkeypatch):
+    # an explicit n is the layout the caller needs (a join pair must
+    # share one width): a layout stored at another width rebuilds at
+    # n, while n=None keeps serving whatever width is stored
+    import json as _json
+    import os
+
+    from milan_telecom_etl__spark import bucketed as B
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
+    name = B.layout_name(SF, "orders", "o_orderkey")
+    path = os.path.join(str(tmp_path), "bucketed", name)
+
+    def stored():
+        manifest = _json.loads(B._read_text(spark, B.fs_join(path, "_shards.json")))
+        parts = [f for f in os.listdir(path) if f.startswith("part-")]
+        return manifest["n"], len(parts)
+
+    serve = lambda n=None: B.appendable_bucketed_table(  # noqa: E731
+        spark, SF, "orders", "o_orderkey", n=n
+    )
+    try:
+        serve(2)
+        assert stored() == (2, 2)
+        df = serve(4)
+        assert stored() == (4, 4)  # rebuilt at the asked width
+        assert "Exchange" not in _plan(df.groupBy("o_orderkey").count())
+        serve()
+        assert stored() == (4, 4)  # n=None serves the stored width
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+
+
 def test_bucketed_corrupt_schema_sidecar_falls_back_to_footer(spark):
     # ADVICE r13 #2: a writer killed mid-write (pre-atomic builds)
     # could leave a truncated _schema.json; re-registration must fall
     # back to footer inference, not raise forever until manual cleanup.
     from milan_telecom_etl__spark import bucketed as B
 
-    built = B.bucketed_table(spark, SF, "orders", "o_orderkey")
-    n = B.derived_n_buckets(spark, SF, "orders")
-    name = B._table_name(SF, "orders", "o_orderkey", n)
+    built = B.appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
+    name = B.layout_name(SF, "orders", "o_orderkey")
     path = B.fs_join(B.artifact_root(), "bucketed", name)
     sidecar = B.fs_join(path, "_schema.json")
     original = B._read_text(spark, sidecar)
@@ -1287,7 +1314,7 @@ def test_bucketed_corrupt_schema_sidecar_falls_back_to_footer(spark):
     try:
         B._write_text(spark, sidecar, original[: len(original) // 2])
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        df = B.bucketed_table(spark, SF, "orders", "o_orderkey")
+        df = B.appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
         assert df.schema == built.schema
         assert "Exchange" not in _plan(df.groupBy("o_orderkey").count())
     finally:
@@ -1368,11 +1395,12 @@ def test_bucketed_derive_requires_variant_and_separates_identity(spark):
     from milan_telecom_etl__spark import bucketed as B
 
     with _pytest.raises(ValueError, match="variant"):
-        B.bucketed_table(spark, SF, "nation", "n_nationkey", derive=lambda d: d)
+        B.appendable_bucketed_table(
+            spark, SF, "nation", "n_nationkey", derive=lambda d: d
+        )
     # a derived layout must never collide with the base table's name
-    n = B.derived_n_buckets(spark, SF, "documents")
-    assert B._table_name(SF, "documents", "fingerprint", n, "fpidx") != B._table_name(
-        SF, "documents", "fingerprint", n
+    assert B.layout_name(SF, "documents", "fingerprint", "fpidx") != B.layout_name(
+        SF, "documents", "fingerprint"
     )
 
 
@@ -1403,12 +1431,11 @@ def test_derived_layout_width_uses_size_fraction(spark):
     # width: one file per bucket is the module's write invariant, so
     # the part-file count IS the bucket count (no vacuous fallback arm)
     import os as _os
-    from milan_telecom_etl__spark.bucketed import _table_name
 
     idx = _fingerprint_index(spark, SF)
     plan = _plan(idx.groupBy("fingerprint").count())
     assert "Exchange" not in plan
-    name = _table_name(SF, "documents", "fingerprint", n_index, "fpidx")
+    name = B.layout_name(SF, "documents", "fingerprint", "fpidx")
     path = B.fs_join(B.artifact_root(), "bucketed", name)
     parts = [f for f in _os.listdir(path) if f.startswith("part-")]
     assert len(parts) == n_index, (n_index, parts)
@@ -1433,12 +1460,14 @@ def test_bucketed_join_pair_shares_one_width_at_divergent_tier(spark):
     assert "SortMergeJoin" in plan
 
 
-def test_derived_key_bucketing_exchange_free_at_n_gt_1(spark):
+def test_derived_key_bucketing_exchange_free_at_n_gt_1(spark, tmp_path, monkeypatch):
     # the shipped tiers all derive n=1 for the fingerprint index (a
     # 50 B/row projection), where zero-Exchange is trivial — force a
     # multi-bucket build of the same derived-key layout and pin that
     # groupBy(fingerprint) still rides the bucket partitioning with
-    # zero Exchange (the mechanism the 100 TB posture relies on).
+    # zero Exchange (the mechanism the 100 TB posture relies on). A
+    # private artifact root: an explicit width would otherwise rebuild
+    # the shared index the registry entries serve.
     from pyspark.sql import functions as F
     from milan_telecom_etl__spark import bucketed as B
     from milan_telecom_etl__spark.operators.text import normalize_text
@@ -1448,9 +1477,10 @@ def test_derived_key_bucketing_exchange_free_at_n_gt_1(spark):
             "doc_id", F.md5(normalize_text("text")).alias("fingerprint")
         )
 
-    name = B._table_name(SF, "documents", "fingerprint", 4, "fpidx")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
+    name = B.layout_name(SF, "documents", "fingerprint", "fpidx")
     try:
-        idx = B.bucketed_table(
+        idx = B.appendable_bucketed_table(
             spark, SF, "documents", "fingerprint", n=4, derive=derive, variant="fpidx"
         )
         agg = idx.groupBy("fingerprint").agg(

@@ -8,11 +8,11 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from milan_telecom_etl__spark.artifacts import append_plan
 from milan_telecom_etl__spark.bucketed import (
     MIN_BUCKET_BYTES,
     TARGET_BUCKET_BYTES,
     _derive_n,
-    append_plan,
 )
 from milan_telecom_etl__spark.session import derived_default_parallelism
 

@@ -10,8 +10,8 @@ from milan_telecom_etl__spark.plans.views import hourly_traffic
 from milan_telecom_etl__spark.schemas import TRAFFIC_RAW
 from milan_telecom_etl__spark.sources.csv import read_csv_glob
 from milan_telecom_etl__spark.streaming.ingest import (
+    _drain,
     hourly_rollup_stream,
-    run_to_memory,
     stream_traffic_csv,
 )
 
@@ -34,10 +34,11 @@ def stream_dir(tmp_path_factory):
 def test_stream_rollup_equals_batch(spark, stream_dir):
     stream = stream_traffic_csv(spark, stream_dir)
     assert stream.isStreaming
-    run_to_memory(hourly_rollup_stream(stream), name="hourly_stream_test")
+    drained = _drain(hourly_rollup_stream(stream), "complete")
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("bt_")]
     got = {
         (r["hour"].isoformat(), r["cell_id"]): r["total_activity"]
-        for r in spark.table("hourly_stream_test").collect()
+        for r in drained.collect()
     }
 
     batch_raw = read_csv_glob(spark, stream_dir, "sms-call-internet-mi-*.csv", TRAFFIC_RAW)

@@ -1,11 +1,13 @@
 """CLI — the reference's main.py flags restated
 (reference main.py:57-65: --setup/--load-geo/--load-data/--test/--all/
---limit-files), plus the incremental variant.
+--limit-files). `--load-data` loads per file for both facts: a rerun
+on the same CSVs is a no-op, and a directory with a new day appends
+only that day.
 
 Usage:
   python -m milan_telecom_etl__spark --all --data-dir /data \\
       --warehouse /wh [--grid grid.geojson] [--provinces prov.geojson]
-  python -m milan_telecom_etl__spark --load-data --incremental ...
+  python -m milan_telecom_etl__spark --load-data --data-dir /data --warehouse /wh
   python -m milan_telecom_etl__spark --test --warehouse /wh
 """
 
@@ -20,11 +22,10 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="milan_telecom_etl__spark")
     p.add_argument("--setup", action="store_true", help="create warehouse dir + views")
     p.add_argument("--load-geo", action="store_true", help="load grid/province dims")
-    p.add_argument("--load-data", action="store_true", help="load traffic/mobility CSVs")
+    p.add_argument("--load-data", action="store_true", help="load new traffic/mobility CSVs")
     p.add_argument("--test", action="store_true", help="run the flagship top-cells query")
     p.add_argument("--all", action="store_true", help="all stages (reference main.py --all)")
     p.add_argument("--limit-files", type=int, default=None)
-    p.add_argument("--incremental", action="store_true", help="per-file manifest ingestion")
     p.add_argument("--data-dir", default=".")
     p.add_argument("--warehouse", default="./warehouse")
     p.add_argument("--grid", default=None)
@@ -39,7 +40,6 @@ def main(argv: list[str] | None = None) -> int:
         load_geometries,
         load_mobility,
         load_traffic,
-        load_traffic_incremental,
         run_test_query,
     )
     from .session import get_spark
@@ -55,10 +55,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.load_geo or args.all:
         load_geometries(wh, args.grid, args.provinces)
     if args.load_data or args.all:
-        if args.incremental:
-            r = load_traffic_incremental(wh, args.data_dir, args.limit_files)
-        else:
-            r = load_traffic(wh, args.data_dir, args.limit_files)
+        r = load_traffic(wh, args.data_dir, args.limit_files)
         print(f"traffic: loaded={r.loaded_rows} skipped={r.skipped} "
               f"invalid_dates={r.invalid_dates} rejected_cells={r.rejected_cells}")
         rm = load_mobility(wh, args.data_dir, args.limit_files)

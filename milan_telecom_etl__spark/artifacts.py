@@ -39,6 +39,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -97,9 +98,17 @@ def artifact_path(sf_dir: str, name: str) -> str:
     return fs_join(artifact_root(), loc_key(sf_dir), name)
 
 
+@functools.lru_cache(maxsize=1)
+def _path_class(gateway):
+    """Hadoop's Path class, resolved once per py4j gateway: each py4j
+    class lookup is a JVM round trip, and `refresh` builds about five
+    Paths per serve."""
+    return gateway.jvm.org.apache.hadoop.fs.Path
+
+
 def _hpath(spark: SparkSession, path: str):
     """(Hadoop Path, its FileSystem) for a local path or URI."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p = _path_class(spark.sparkContext._gateway)(path)
     return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
@@ -212,15 +221,16 @@ def refresh(
     path: str,
     rebuild: Callable[[], dict],
     append: Callable[[list[str], dict], None] | None = None,
-    stale: Callable[[dict], bool] | None = None,
+    stale: Callable[[dict, dict], bool] | None = None,
     data: str | None = None,
 ) -> dict:
     """Bring the standing artifact at `path` up to date with the source
     table and return its manifest. `rebuild()` writes the whole
     artifact and returns the store's own manifest fields;
     `append(new_files, manifest)` adds only the new files' rows (no
-    callback: growth rebuilds); `stale(manifest)` is a store's extra
-    rebuild rule over a valid manifest. `data` is where the build's
+    callback: growth rebuilds); `stale(manifest, current)` is a store's
+    extra rebuild rule over a valid manifest and the source's current
+    listing. `data` is where the build's
     `_SUCCESS` lands when it is not `path` itself.
 
     An append is two commits with no transaction between them (data,
@@ -243,7 +253,7 @@ def refresh(
     )
     if action != "rebuild" and (
         _read_text(spark, pending) is not None
-        or (stale is not None and stale(manifest))
+        or (stale is not None and stale(manifest, current))
         or (action == "append" and append is None)
     ):
         action = "rebuild"

@@ -223,19 +223,21 @@ def appendable_bucketed_table(
     path = fs_join(artifact_root(), "bucketed", name)
     migrate_to: list[int] = []
 
-    def stale(manifest: dict) -> bool:
+    def stale(manifest: dict, current: dict) -> bool:
         built = manifest.get("n")
         if not isinstance(built, int):
             return True
         if n is not None:
             return built != n
-        # FRESH byte probe, deliberately bypassing derived_n_buckets's
-        # process-lifetime memo: the migration trigger exists precisely
-        # for a long-lived ingest process whose corpus grows under the
-        # same path, which the memo by design never re-observes (r14
-        # review finding #2). The rebuild then uses this fresh width.
+        # FRESH bytes from the listing refresh just made, deliberately
+        # bypassing derived_n_buckets's process-lifetime memo: the
+        # migration trigger exists precisely for a long-lived ingest
+        # process whose corpus grows under the same path, which the
+        # memo by design never re-observes (r14 review finding #2).
+        # The rebuild then uses this fresh width.
+        nbytes = sum(size for size, _ in current.values())
         n_now = _derive_n(
-            max(1, int(_table_bytes(spark, sf_dir, table) * size_fraction)),
+            max(1, int(nbytes * size_fraction)),
             spark.sparkContext.defaultParallelism,
         )
         if n_now >= built * WIDTH_MIGRATION_FACTOR:

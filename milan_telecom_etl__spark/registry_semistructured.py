@@ -290,7 +290,7 @@ def q_hll_partial_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving batch, append kilobytes, serve global counts without
     re-scanning history."""
     from .artifacts import load_or_append_partials
-    from .sources.parquet import adapt_table
+    from .sources.parquet import adapt_table, pin_parity_confs
 
     def build(raw: DataFrame) -> DataFrame:
         ev = adapt_table(raw, "events")
@@ -298,8 +298,7 @@ def q_hll_partial_append_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("user_id", HLL_LG_K).alias("sk")
         )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_parity_confs(spark)
     partials = load_or_append_partials(
         spark, sf_dir, f"hll_user_partials_lgk{HLL_LG_K}", build, table="events"
     )

@@ -40,43 +40,25 @@ from pyspark.sql import functions as F
 from .queries_registry import register
 from .streaming.ingest import _drain
 
-_EVENTS_STREAM_SCHEMA = (
-    "event_id long, ts {ts_type}, user_id long, event_type string, value double, props string"
-)
-
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the driver's events parquet. Same timestamp
-    handling as sources/parquet.load_table, made schema-adaptive: a
-    cheap batch footer probe decides whether `ts` is TIMESTAMP(NANOS)
-    (surfaces as long under nanosAsLong; floor-convert ns → µs, the
-    same truncation DuckDB applies fetching TIMESTAMP_NS) or a native
-    TIMESTAMP(MICROS) Spark reads directly. File streams take a fixed
-    user schema, so the probe picks it before the stream starts."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    from pyspark.sql import types as T
+    """readStream over the driver's events parquet, normalized exactly
+    like sources/parquet.load_table. A file stream takes a fixed user
+    schema, so it gets the batch read's memoized footer schema (no
+    re-read of the footer per stream build, r15 optimization round)
+    and then the same `adapt_table` (long nanos → floor µs, NTZ →
+    session-TZ timestamp)."""
+    from .sources.parquet import _parquet_schema, adapt_table
 
-    from .sources.parquet import _parquet_schema
-
-    # footer-probe memo (r15 optimization round): same per-file-state
-    # schema cache load_table uses — the probe re-read the events footer
-    # on every stream build (~130 ms x 13 streaming entries x 4 bench
-    # reps), and the answer only changes when the file does.
-    probe = _parquet_schema(spark, f"{sf_dir}/events.parquet")
-    ts_is_long = isinstance(probe["ts"].dataType, T.LongType)
+    schema = _parquet_schema(spark, f"{sf_dir}/events.parquet")
     # file streams need a directory source; pathGlobFilter narrows the
     # listing to the one events file
     raw = (
-        spark.readStream.schema(
-            _EVENTS_STREAM_SCHEMA.format(ts_type="long" if ts_is_long else "timestamp")
-        )
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if ts_is_long:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return adapt_table(raw, "events")
 
 
 @register(

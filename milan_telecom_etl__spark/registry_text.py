@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from .operators import dedup as D
 from .operators import text as X
 from .queries_registry import register
-from .sources.parquet import load_table, table_row_count
+from .sources.parquet import _file_state_key, load_table, table_row_count
 
 # --- shared DuckDB fragments ------------------------------------------------
 
@@ -3663,11 +3663,11 @@ def q_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGE_ROUNDS = 8
 
-# One trained-BPE pass per (session, sf_dir, k, mode), shared by the
-# three BPE entries (VERDICT r9 #4 — each used to re-run the full
+# One trained-BPE pass per (session, sf_dir file state, k, mode), shared
+# by the three BPE entries (VERDICT r9 #4 — each used to re-run the full
 # 8-round training, 3x ~2.5 s per sweep). Last-entry semantics like
-# sources.parquet._REGISTERED: an sf_dir/session change retrains and
-# releases the stale vocab. The cached value is (merges, vocab) with
+# sources.parquet._REGISTERED: a session change, another sf_dir or a
+# rewritten file under it retrains and releases the stale vocab. The cached value is (merges, vocab) with
 # the vocab left PERSISTED for the session — vocabulary-grain, the
 # tokenizer-training shrink, exactly the artifact a production
 # pipeline trains once and reuses.
@@ -3678,7 +3678,7 @@ def _trained_bpe(spark, sf_dir: str, k: int, pre_tokenizer: str = "alpha"):
     from .operators.text import _bpe_train
 
     slot = (k, pre_tokenizer)
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (spark.sparkContext.applicationId, _file_state_key(sf_dir))
     cached = _BPE_TRAINED.get(slot)
     if cached is not None and cached[0] == key:
         return cached[1]

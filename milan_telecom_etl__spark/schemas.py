@@ -1,10 +1,15 @@
-"""Explicit schemas — the engine declares types at read time.
+"""Explicit schemas — the engine declares types and reads with them.
 
 The reference *infers* at ingest (pd.read_csv with no dtypes,
 reference src/etl.py:128,234) and *fixes* types at the warehouse layer
 (DDL, reference src/database.py:66-99). We invert: explicit StructTypes
 at read time, so types are stable and no inference pass is needed
-(SURVEY.md §1.2).
+(SURVEY.md §1.2). The raw CSV schemas are what the fact loaders read
+with; the warehouse schemas are the contract `pipeline.TABLES` holds
+(the facts add their `load_date` partition column): every warehouse
+write selects the declared columns, so a loader that drifts from them
+fails its write, and every read takes the declared schema instead of
+inferring one.
 """
 
 from __future__ import annotations
@@ -90,6 +95,10 @@ DIM_PROVINCES = T.StructType(
         T.StructField("provincia", T.StringType(), False),
         T.StructField("geometry", T.StringType()),  # WKT MultiPolygon, 32632
         T.StructField("population", T.IntegerType(), False),
+        T.StructField("minx", T.DoubleType()),
+        T.StructField("miny", T.DoubleType()),
+        T.StructField("maxx", T.DoubleType()),
+        T.StructField("maxy", T.DoubleType()),
     ]
 )
 

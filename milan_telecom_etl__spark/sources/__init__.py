@@ -1,2 +1,1 @@
 from .parquet import load_table, register_testdata  # noqa: F401
-from .csv import read_csv_glob  # noqa: F401

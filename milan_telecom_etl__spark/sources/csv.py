@@ -1,23 +1,17 @@
-"""CSV sources (S1-S3, SURVEY.md §2.1).
+"""CSV sources (S1-S2, SURVEY.md §2.1).
 
 The reference reads one daily CSV at a time in a driver loop
 (reference src/etl.py:126-128,232-234). Spark-first: resolve the glob
 driver-side (to preserve the reference's sorted-order + limit-files
 semantics, S2 — reference src/etl.py:111-115,203-207), then hand the
-*whole* path list to one spark.read.csv — Spark schedules one task per
-file/split, so the per-file loop disappears and the read scales
-horizontally.
+*whole* path list to one spark.read.csv (`pipeline._load_fact`) —
+Spark schedules one task per file/split, so the per-file loop
+disappears and the read scales horizontally.
 """
 
 from __future__ import annotations
 
 import glob as _glob
-import logging
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-logger = logging.getLogger(__name__)
 
 
 def resolve_files(data_dir: str, pattern: str, limit_files: int | None = None) -> list[str]:
@@ -27,20 +21,3 @@ def resolve_files(data_dir: str, pattern: str, limit_files: int | None = None) -
     if limit_files is not None:
         files = files[:limit_files]
     return files
-
-
-def read_csv_glob(
-    spark: SparkSession,
-    data_dir: str,
-    pattern: str,
-    schema: T.StructType,
-    limit_files: int | None = None,
-) -> DataFrame | None:
-    """S1+S2+S3: read a sorted, optionally-limited CSV glob as ONE
-    DataFrame. Returns None when the glob is empty (S3 empty-source
-    guard, reference src/etl.py:117-119)."""
-    files = resolve_files(data_dir, pattern, limit_files)
-    if not files:
-        logger.warning("no files matched %s/%s — skipping", data_dir, pattern)
-        return None
-    return spark.read.csv(files, header=True, schema=schema)

@@ -135,11 +135,18 @@ def table_row_count(sf_dir: str, name: str) -> int:
     return n
 
 
+def pin_parity_confs(spark: SparkSession) -> None:
+    """The parity confs every testdata read assumes (`_EVENT_TS_COLS`),
+    set at read time: the driver builds a vanilla session."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     # Pin the inference-relevant conf HERE, not only in load_table
     # (ADVICE r15): the memoized schema must be conf-correct no matter
     # which caller populates the cache first.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_parity_confs(spark)
     key = _file_state_key(path)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
@@ -149,21 +156,18 @@ def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     return adapt_table(
         spark.read.schema(_parquet_schema(spark, path)).parquet(path), name
     )
 
 
-# last-registered sf_dir per session (app id) — re-registering on every
-# SQL-front-door call re-reads 10 parquet footers per run, the fixed
-# ~0.3 s that made top_cells_sql ~2x the DataFrame flagship (VERDICT
-# r8 #8). Tracking the LAST dir (not a seen-set) keeps alternating
-# sf_dirs within one session (scale_bench's small/big pattern) correct:
-# any dir change re-registers.
-_REGISTERED: dict[str, str] = {}
+# last-registered sf_dir file state per session (app id) —
+# re-registering on every SQL-front-door call re-reads 10 parquet
+# footers per run, the fixed ~0.3 s that made top_cells_sql ~2x the
+# DataFrame flagship (VERDICT r8 #8). Any change of dir or of a file
+# under it re-registers: a view's file index is frozen at first read.
+_REGISTERED: dict[str, tuple] = {}
 
 
 def register_testdata(
@@ -171,13 +175,14 @@ def register_testdata(
 ) -> None:
     """Register every testdata parquet as a temp view (same names DuckDB
     pre-registers for the oracle). Idempotent while the session's
-    registered sf_dir is unchanged (repeat calls are a dict lookup) —
-    pass force=True after dropping views manually."""
+    registered sf_dir and its files are unchanged — pass force=True
+    after dropping views manually."""
     app = spark.sparkContext.applicationId
-    if not force and _REGISTERED.get(app) == sf_dir:
+    state = _file_state_key(sf_dir)
+    if not force and _REGISTERED.get(app) == state:
         return
     for name in TESTDATA_TABLES:
         path = f"{sf_dir}/{name}.parquet"
         if os.path.exists(path):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _REGISTERED[app] = sf_dir
+    _REGISTERED[app] = state

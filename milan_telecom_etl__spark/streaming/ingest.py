@@ -14,6 +14,7 @@ executor partition.
 
 from __future__ import annotations
 
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -147,29 +148,16 @@ def stream_merge_sink(
     idempotent (replaying a batch overwrites the same keys with the
     same rows) — the standard foreachBatch contract. At 100 TB the
     per-batch rewrite narrows to touched partitions (dynamic partition
-    overwrite), exactly like the batch upsert path it reuses.
+    overwrite), exactly like the batch MERGE path whose rows it reuses
+    (`pipeline._merged_rows`).
     """
-    from pyspark.sql import functions as F  # noqa: F401  (parity with batch path)
-
-    from ..pipeline import read_versioned, write_versioned
+    from ..pipeline import _merged_rows, read_versioned, write_versioned
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        import os
-
         if os.path.exists(os.path.join(table_dir, "CURRENT")):
-            target = read_versioned(spark, table_dir)
-            from pyspark.sql import functions as FF
-
-            keep = target.join(
-                FF.broadcast(batch.select(*key_cols).distinct()),
-                key_cols,
-                "left_anti",
-            )
-            merged = keep.unionByName(batch.select(*target.columns))
-        else:
-            merged = batch
-        write_versioned(merged, table_dir)
+            target = read_versioned(batch.sparkSession, table_dir)
+            batch = _merged_rows(target, batch, key_cols)
+        write_versioned(batch, table_dir)
 
     writer = (
         stream.writeStream.foreachBatch(merge_batch)

@@ -219,7 +219,8 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
 
 
 def test_upsert_parquet_merge_semantics(spark, tmp_path):
-    from milan_telecom_etl__spark.pipeline import upsert_parquet
+    # a plain upsert is a CDC batch without an op column
+    from milan_telecom_etl__spark.pipeline import apply_cdc_parquet
 
     path = str(tmp_path / "target")
     spark.createDataFrame(
@@ -228,7 +229,7 @@ def test_upsert_parquet_merge_semantics(spark, tmp_path):
     updates = spark.createDataFrame(
         [(2, "b2", 99), (4, "d", 40)], "k: long, name: string, v: long"
     )
-    upsert_parquet(spark, path, updates, ["k"])
+    apply_cdc_parquet(spark, path, updates, ["k"], op_col=None)
     got = {r["k"]: (r["name"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {1: ("a", 10), 2: ("b2", 99), 3: ("c", 30), 4: ("d", 40)}
 
@@ -346,3 +347,118 @@ def test_drop_existing_rebuilds_schema(spark, data_dir, tmp_path):
     assert spark.read.parquet(
         os.path.join(wh_dir, "fact_traffic_milan")
     ).count() > 0
+
+
+def test_declared_schemas_match_what_run_all_writes(spark, warehouse):
+    # the warehouse contract: each table's declared schema (facts with
+    # their load_date partition column) is what the loaders wrote, by
+    # name, type and order; nullability aside (file reads are nullable)
+    from milan_telecom_etl__spark.pipeline import TABLES
+
+    wh, _ = warehouse
+    assert set(TABLES) == {
+        "dim_grid_milan", "dim_provinces_it", "fact_traffic_milan", "fact_mobility_provinces",
+    }
+    for table, schema in TABLES.items():
+        written = spark.read.parquet(wh.path(table)).schema
+        assert [(f.name, f.dataType) for f in schema.fields] == [
+            (f.name, f.dataType) for f in written.fields
+        ], table
+
+
+def test_views_and_test_query_launch_no_jobs(spark, warehouse):
+    # declared-schema reads: building the views and the flagship query
+    # infers nothing, so no Spark job runs before the query's action
+    wh, _ = warehouse
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs0 = dag.numTotalJobs()
+    wh.register_views()
+    top = run_test_query(wh)
+    assert dag.numTotalJobs() == jobs0
+    assert top.collect()  # and the frame still runs
+
+
+def test_incremental_after_run_all_is_a_noop(spark, warehouse, data_dir):
+    # one load state for both traffic entry points: the files run_all
+    # loaded are not appended again
+    from milan_telecom_etl__spark.pipeline import load_traffic_incremental
+
+    wh, _ = warehouse
+    n_before = spark.read.parquet(wh.path("fact_traffic_milan")).count()
+    rep = load_traffic_incremental(wh, str(data_dir))
+    assert rep.skipped
+    assert spark.read.parquet(wh.path("fact_traffic_milan")).count() == n_before
+
+
+def test_mobility_takes_a_new_day(spark, data_dir, tmp_path):
+    import shutil
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for f in ("mi-to-provinces-2013-11-01.csv", "provinces.geojson"):
+        shutil.copy(data_dir / f, feed / f)
+    wh_dir = str(tmp_path / "wh")
+    run_all(spark, wh_dir, str(feed), provinces_file=str(feed / "provinces.geojson"))
+    wh = Warehouse(spark, wh_dir)
+    n_day1 = spark.read.parquet(wh.path("fact_mobility_provinces")).count()
+    # day 2: two kept rows, an unknown province and a bad date
+    (feed / "mi-to-provinces-2013-11-02.csv").write_text(
+        "datetime,CellID,provinceName,cell2Province,Province2cell\n"
+        "2013-11-02 00:00:00,1,MILANO,1.0,2.0\n"
+        "2013-11-02 00:10:00,2,PAVIA,3.0,\n"
+        "2013-11-02 00:20:00,3,ATLANTIS,1.0,1.0\n"
+        "bad-date,4,MILANO,1.0,1.0\n"
+    )
+    rep = load_mobility(wh, str(feed))
+    assert not rep.skipped
+    assert (rep.loaded_rows, rep.invalid_dates) == (2, 1)
+    fact = spark.read.parquet(wh.path("fact_mobility_provinces"))
+    assert fact.count() == n_day1 + 2
+    day2 = fact.filter(F.col("load_date") == "2013-11-02")
+    assert sorted((r["provincia"], r["province2cell"]) for r in day2.collect()) == [
+        ("Milano", 2.0), ("Pavia", 0.0)
+    ]
+    assert load_mobility(wh, str(feed)).skipped  # rerun: no new file
+
+
+def test_interrupted_append_loads_each_file_once(spark, tmp_path, monkeypatch):
+    # a process killed between an append's data commit and its manifest
+    # write: the next load must neither append the committed day again
+    # nor lose it
+    import os
+
+    from milan_telecom_etl__spark import pipeline
+
+    header = "datetime,CellID,countrycode,smsin,smsout,callin,callout,internet\n"
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    day1 = feed / "sms-call-internet-mi-2013-11-01.csv"
+    day1.write_text(header + "2013-11-01 00:00:00,1,39,1,1,1,1,1\n")
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    assert load_traffic(wh, str(feed)).loaded_rows == 1
+    (feed / "sms-call-internet-mi-2013-11-02.csv").write_text(
+        header + "2013-11-02 00:00:00,2,39,2,2,2,2,2\n2013-11-02 00:10:00,3,39,3,3,3,3,3\n"
+    )
+    write_text = pipeline._write_text
+
+    def crash_on_manifest(spark_, path, text):
+        if path.endswith("_loaded_files.json"):
+            raise RuntimeError("killed after the data commit")
+        write_text(spark_, path, text)
+
+    monkeypatch.setattr(pipeline, "_write_text", crash_on_manifest)
+    with pytest.raises(RuntimeError, match="killed"):
+        load_traffic(wh, str(feed))
+    monkeypatch.setattr(pipeline, "_write_text", write_text)
+    fact_path = wh.path("fact_traffic_milan")
+    assert spark.read.parquet(fact_path).count() == 3  # day 2 committed
+    # the rebuild needs every loaded file: a vanished one is named
+    os.rename(day1, tmp_path / "away.csv")
+    with pytest.raises(FileNotFoundError, match="2013-11-01"):
+        load_traffic(wh, str(feed))
+    os.rename(tmp_path / "away.csv", day1)
+    rep = load_traffic(wh, str(feed))
+    assert not rep.skipped and rep.loaded_rows == 3  # rebuilt from both days
+    assert spark.read.parquet(fact_path).count() == 3
+    assert load_traffic(wh, str(feed)).skipped
+    assert spark.read.parquet(fact_path).count() == 3

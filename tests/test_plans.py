@@ -1253,11 +1253,13 @@ def test_appendable_index_rebuilds_on_mutation_pending_and_width(
         gen2 = {f for f in os.listdir(ipath) if f.endswith(".parquet")}
         assert gen2 != gen1
 
-        # 3. width migration: the FRESH byte probe (not the memoized
-        # derived_n_buckets — a long-lived ingest process's memo never
-        # re-observes growth) sees a corpus that derives width 8
+        # 3. width migration: the bytes of refresh's FRESH listing (not
+        # the memoized derived_n_buckets — a long-lived ingest process's
+        # memo never re-observes growth) derive width 8
         # >= 2 * WIDTH_MIGRATION_FACTOR -> rebuild at the fresh width
-        monkeypatch.setattr(B, "_table_bytes", lambda *a, **k: 34 << 20)
+        listed = sum(os.path.getsize(os.path.join(tdir, f)) for f in os.listdir(tdir)
+                     if not f.startswith((".", "_")))
+        monkeypatch.setattr(B, "_derive_n", lambda nbytes, par: 8 if nbytes == listed else 2)
         serve()
         manifest = _json.loads(B._read_text(spark, B.fs_join(ipath, "_shards.json")))
         assert manifest["n"] == 8

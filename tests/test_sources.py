@@ -230,3 +230,24 @@ def test_table_row_count_and_schema_on_directory_tables(spark, tmp_path):
     )
     assert _file_state_key(str(tbl)) != key_before
     assert table_row_count(sf_dir, "documents") == 137 - n_dropped
+
+
+def test_register_testdata_sees_a_rewritten_table(spark, tmp_path):
+    # a registered view's file index is frozen at its first read: the
+    # same sf_dir with a table rewritten in place must re-register
+    from milan_telecom_etl__spark.sources.parquet import register_testdata
+
+    def write_events(n):
+        spark.range(n).selectExpr(
+            "id AS event_id", "timestamp_micros(id) AS ts"
+        ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+
+    try:
+        write_events(5)
+        register_testdata(spark, str(tmp_path))
+        assert spark.table("events").count() == 5
+        write_events(9)
+        register_testdata(spark, str(tmp_path))
+        assert spark.table("events").count() == 9
+    finally:
+        spark.catalog.dropTempView("events")

@@ -8,7 +8,7 @@ import pytest
 from milan_telecom_etl__spark.operators.cleansing import cleanse_traffic
 from milan_telecom_etl__spark.plans.views import hourly_traffic
 from milan_telecom_etl__spark.schemas import TRAFFIC_RAW
-from milan_telecom_etl__spark.sources.csv import read_csv_glob
+from milan_telecom_etl__spark.sources.csv import resolve_files
 from milan_telecom_etl__spark.streaming.ingest import (
     _drain,
     hourly_rollup_stream,
@@ -41,7 +41,9 @@ def test_stream_rollup_equals_batch(spark, stream_dir):
         for r in drained.collect()
     }
 
-    batch_raw = read_csv_glob(spark, stream_dir, "sms-call-internet-mi-*.csv", TRAFFIC_RAW)
+    batch_raw = spark.read.csv(
+        resolve_files(stream_dir, "sms-call-internet-mi-*.csv"), header=True, schema=TRAFFIC_RAW
+    )
     expected = {
         (r["hour"].isoformat(), r["cell_id"]): r["total_activity"]
         for r in hourly_traffic(cleanse_traffic(batch_raw)).collect()

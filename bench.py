@@ -28,7 +28,6 @@ import subprocess
 import sys
 import time
 
-from milan_telecom_etl__spark.caching import release_tracked
 from milan_telecom_etl__spark.session import get_spark
 from perfbench.probe import StageMeter
 
@@ -124,11 +123,6 @@ def main() -> None:
         except Exception as e:  # never let one query sink the whole bench
             print(f"bench: {name} failed: {e}", file=sys.stderr)
             timings[name] = -1.0
-        finally:
-            # registry-declared persists (caching.py) are released by
-            # the harness AFTER the reps — warm within an entry's
-            # median-of-3, clean before the next entry (VERDICT r12 #1)
-            release_tracked()
 
     spark.catalog.clearCache()
 

@@ -1424,14 +1424,15 @@ def _knn_eval_df(emb: DataFrame) -> DataFrame:
 
 @register("knn_method_eval_full", f"WITH {_KNN_EVAL_BODY}", diagnostic=True)
 def q_knn_method_eval_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-CORPUS diagnostic twin of `knn_method_eval` (opt-in via
-    SPARK_GRAFT_FULL_EVALS=1 — the same demotion the lsh_s_curve and
-    dedup_method_eval families got in r11; VERDICT r11 #2 asked for
-    one discipline across all three eval families): each ANN method
-    (single-table LSH, 4x2 multi-table LSH, IVF nprobe=2, the 8-table
-    default) scored against the exact brute-force top-5 for the 5 query
-    vectors — the per-corpus eval that picks the retriever tier
-    (`dedup_method_eval_full` is the same discipline for dedup).
+    """FULL-CORPUS diagnostic twin of `knn_method_eval` (never
+    driver-gated; it lives in DIAGNOSTIC_QUERIES — the same demotion
+    the lsh_s_curve and dedup_method_eval families got in r11; VERDICT
+    r11 #2 asked for one discipline across all three eval families):
+    each ANN method (single-table LSH, 4x2 multi-table LSH, IVF
+    nprobe=2, the 8-table default) scored against the exact brute-force
+    top-5 for the 5 query vectors — the per-corpus eval that picks the
+    retriever tier (`dedup_method_eval_full` is the same discipline for
+    dedup).
 
     Scale story: ONE persisted bits table buckets all LSH tiers (the
     prefix-stable plane generator makes every tier's bucket a slice of
@@ -2131,17 +2132,15 @@ def q_knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one |q| x |corpus| pass every recall eval pays; at scale it
     runs on the deterministic hash slice (the `knn_method_eval`
     default's posture)."""
-    out, cand = _ivf_recall_curve_plan(spark, sf_dir)
+    out = _ivf_recall_curve_plan(spark, sf_dir)
     rows = out.collect()  # bounded: one row per probe depth
     return spark.createDataFrame(rows, out.schema)
 
 
 def _ivf_recall_curve_plan(spark: SparkSession, sf_dir: str):
-    """The LAZY curve frame plus its persisted candidate table — split
-    out so the plan pins can explain() the distributed plan (the entry
-    returns a materialized local frame); the candidate persist is
-    tracked (caching.py) and released by the harness — warm across a
-    bench's reps, one-call cleanup in long sessions (VERDICT r12 #1)."""
+    """The LAZY curve frame over a persisted candidate table — split out
+    so the plan pins can explain() the distributed plan (the entry
+    returns a materialized local frame)."""
     from pyspark.sql.window import Window
 
     from .operators.clustering import sq_dist
@@ -2184,9 +2183,7 @@ def _ivf_recall_curve_plan(spark: SparkSession, sf_dir: str):
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    from .caching import tracked_persist
-
-    cand = tracked_persist(cand)
+    cand = cand.persist()
     from .operators.similarity import cosine_knn_bruteforce
 
     exact = cosine_knn_bruteforce(emb, n_queries, k).select(
@@ -2218,4 +2215,4 @@ def _ivf_recall_curve_plan(spark: SparkSession, sf_dir: str):
         )
         .orderBy("n_probe")
     )
-    return out, cand
+    return out

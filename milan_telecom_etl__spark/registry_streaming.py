@@ -38,27 +38,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries_registry import register
-from .streaming.ingest import _drain
+from .streaming.ingest import _drain, dedupe_stream, interval_join_streams
 
 
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the driver's events parquet, normalized exactly
-    like sources/parquet.load_table. A file stream takes a fixed user
-    schema, so it gets the batch read's memoized footer schema (no
-    re-read of the footer per stream build, r15 optimization round)
-    and then the same `adapt_table` (long nanos → floor µs, NTZ →
-    session-TZ timestamp)."""
+def _stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """readStream over one of the driver's testdata parquets,
+    normalized exactly like sources/parquet.load_table. A file stream
+    takes a fixed user schema, so it gets the batch read's memoized
+    footer schema (no re-read of the footer per stream build, r15
+    optimization round) and then the same `adapt_table` (for events:
+    long nanos → floor µs, NTZ → session-TZ timestamp)."""
     from .sources.parquet import _parquet_schema, adapt_table
 
-    schema = _parquet_schema(spark, f"{sf_dir}/events.parquet")
+    schema = _parquet_schema(spark, f"{sf_dir}/{name}.parquet")
     # file streams need a directory source; pathGlobFilter narrows the
-    # listing to the one events file
+    # listing to the one table file
     raw = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
-    return adapt_table(raw, "events")
+    return adapt_table(raw, name)
 
 
 @register(
@@ -78,7 +78,7 @@ def q_streaming_rollup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention) keep the float total order-insensitive on both sides.
     State story at scale: incremental agg keyed on (window, event_type),
     watermark bounds open windows."""
-    ev = _stream_events(spark, sf_dir).withColumn(
+    ev = _stream_table(spark, sf_dir, "events").withColumn(
         "vu", F.round(F.col("value") * 1000000).cast("long")
     )
     agg = (
@@ -102,18 +102,15 @@ def q_streaming_rollup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_dedupe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state streaming dedupe (dropDuplicatesWithinWatermark,
-    streaming/ingest.dedupe_stream shape) on (user_id, event_type).
+    """Bounded-state streaming dedupe (dropDuplicatesWithinWatermark via
+    streaming/ingest.dedupe_stream) on (user_id, event_type).
     Only the key columns are emitted — WHICH row of a duplicate group
     survives is execution-order-dependent, the key set equals batch
     DISTINCT exactly. State ages out at the watermark horizon, the fix
     that keeps an exactly-once repair viable on an unbounded stream."""
-    ev = _stream_events(spark, sf_dir)
-    deduped = (
-        ev.withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type")
-    )
+    deduped = dedupe_stream(
+        _stream_table(spark, sf_dir, "events"), keys=["user_id", "event_type"]
+    ).select("user_id", "event_type")
     return _drain(deduped, "append")
 
 
@@ -129,39 +126,32 @@ def q_streaming_dedupe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_streaming_interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked stream-stream interval join (last-touch attribution,
-    streaming/ingest.interval_join_streams shape): purchases join the
+    streaming/ingest.interval_join_streams): purchases join the
     clicks that preceded them by ≤1 h for the same user. Both sides
     watermarked + event-time-bounded join condition = GC-able state on
     a real stream; drained as one availableNow batch it emits exactly
     the batch interval-join matches."""
     clicks = (
-        _stream_events(spark, sf_dir)
+        _stream_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user_id"),
             F.col("ts").alias("c_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("c_ts", "2 hours")
     )
     purchases = (
-        _stream_events(spark, sf_dir)
+        _stream_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
             F.col("ts").alias("p_ts"),
             F.col("event_id").alias("purchase_id"),
         )
-        .withWatermark("p_ts", "2 hours")
     )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "c_user_id = p_user_id AND p_ts >= c_ts "
-            "AND p_ts <= c_ts + INTERVAL 1 HOUR"
-        ),
-        "inner",
-    ).select(F.col("p_user_id").alias("user_id"), "purchase_id", "click_id")
+    joined = interval_join_streams(clicks, purchases).select(
+        F.col("p_user_id").alias("user_id"), "purchase_id", "click_id"
+    )
     return _drain(joined, "append")
 
 
@@ -285,7 +275,7 @@ def q_streaming_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     without materializing a user's history."""
     from .streaming.sessions import sessionize_stream
 
-    ev = _stream_events(spark, sf_dir).select(
+    ev = _stream_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
         F.round(F.col("value") * 1000000).cast("double").alias("value"),
@@ -300,18 +290,7 @@ def q_streaming_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOCS_STREAM_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 _PROBE_NEW_MAX_ID = 100
-
-
-def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the driver's documents parquet (fixed user
-    schema; pathGlobFilter narrows the directory listing)."""
-    return (
-        spark.readStream.schema(_DOCS_STREAM_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
 
 
 def _index_probe_sql() -> str:
@@ -357,7 +336,7 @@ def q_streaming_index_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame
         F.md5(normalize_text("text")).alias("f"),
     )
     stream = (
-        _stream_documents(spark, sf_dir)
+        _stream_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _PROBE_NEW_MAX_ID)
         .select(
             F.col("doc_id").alias("new_doc"),
@@ -476,7 +455,7 @@ def q_streaming_dsir_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.element_at(llr_arr, ((_md5_int60(w) % F.lit(64)) + F.lit(1)).cast("int")),
     )
     stream = (
-        _stream_documents(spark, sf_dir)
+        _stream_table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") < _PROBE_NEW_MAX_ID) & F.col("text").isNotNull())
         .select("doc_id", F.round(weight, 6).alias("weight"))
     )
@@ -522,7 +501,9 @@ def q_streaming_curation_gate_batch(spark: SparkSession, sf_dir: str) -> DataFra
         url_flag_frame,
     )
 
-    st = url_flag_frame(_stream_documents(spark, sf_dir), extra_cols=("text",))
+    st = url_flag_frame(
+        _stream_table(spark, sf_dir, "documents"), extra_cols=("text",)
+    )
     st = st.select("doc_id", "text", F.col("allowed").alias("url_allowed"))
     st = gopher_flag_frame(st, extra_cols=("text", "url_allowed"))
     qp = F.lit(True)
@@ -656,7 +637,7 @@ def q_streaming_containment_probe_batch(
         )
         .select("doc_id", _md5_int60(F.col("shingle")).alias("shingle_hash"))
     )
-    st = _stream_documents(spark, sf_dir).filter(F.col("doc_id") < b)
+    st = _stream_table(spark, sf_dir, "documents").filter(F.col("doc_id") < b)
     ws = F.split(normalize_text("text"), " ")
     st = st.select(F.col("doc_id").alias("new_doc"), shingles_of(ws, 3).alias("__ss"))
     hashes = F.array_sort(F.transform(F.col("__ss"), lambda s: _md5_int60(s)))
@@ -758,7 +739,7 @@ def _fertility_df(
     # hash join, correct at any size.
     if vocab_rows <= BPE_BROADCAST_VOCAB_MAX:
         vt = F.broadcast(vt)
-    st = _stream_documents(spark, sf_dir).filter(F.col("doc_id") < b)
+    st = _stream_table(spark, sf_dir, "documents").filter(F.col("doc_id") < b)
     words = st.select(
         "source", F.explode(_bpe_words("text", "alpha")).alias("w")
     )
@@ -888,7 +869,7 @@ def q_streaming_quality_probe_batch(
         f"quality_probe_model_b{b}",
         lambda: _train_probe_model(spark, sf_dir),
     )
-    st = _stream_documents(spark, sf_dir).filter(F.col("doc_id") < b)
+    st = _stream_table(spark, sf_dir, "documents").filter(F.col("doc_id") < b)
     out = _probe_score(probe_features(st), model, streaming=True)
     return _drain(out, "append")
 
@@ -906,6 +887,6 @@ def q_streaming_quality_probe_train_batch(
 
     b = _PROBE_NEW_MAX_ID
     model = _train_probe_model(spark, sf_dir)
-    st = _stream_documents(spark, sf_dir).filter(F.col("doc_id") < b)
+    st = _stream_table(spark, sf_dir, "documents").filter(F.col("doc_id") < b)
     out = _probe_score(probe_features(st), model, streaming=True)
     return _drain(out, "append")

@@ -2280,10 +2280,10 @@ def q_quality_threshold_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     diagnostic=True,
 )
 def q_dedup_method_eval_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-CORPUS diagnostic twin of `dedup_method_eval` (opt-in via
-    SPARK_GRAFT_FULL_EVALS=1 — VERDICT r10 #1: the uncapped exact side
-    is quadratic in template-family size, 4.35x wall at 3x data; the
-    hash-sliced default carries the gate instead).
+    """FULL-CORPUS diagnostic twin of `dedup_method_eval` (never
+    driver-gated; it lives in DIAGNOSTIC_QUERIES — VERDICT r10 #1: the
+    uncapped exact side is quadratic in template-family size, 4.35x
+    wall at 3x data; the hash-sliced default carries the gate instead).
 
     The measurement that justifies an LSH configuration: candidate
     precision/recall of the 16-hash/2-row MinHash banding against the
@@ -4136,12 +4136,13 @@ def _s_curve_sql() -> str:
 
 @register("lsh_s_curve_full", _s_curve_sql(), diagnostic=True)
 def q_lsh_s_curve_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-CORPUS diagnostic twin of `lsh_s_curve` (opt-in via
-    SPARK_GRAFT_FULL_EVALS=1 — VERDICT r10 #1 demoted it from the
-    gated default: the exact ground-truth leg measured 9.2x wall at
-    the 3.33x sf3->sf10 decade because true-pair volume grows with
-    duplicate density squared; the hash-sliced default measured 2.10x
-    on the same decade with the same estimate power).
+    """FULL-CORPUS diagnostic twin of `lsh_s_curve` (never
+    driver-gated; it lives in DIAGNOSTIC_QUERIES — VERDICT r10 #1
+    demoted it from the gated default: the exact ground-truth leg
+    measured 9.2x wall at the 3.33x sf3->sf10 decade because true-pair
+    volume grows with duplicate density squared; the hash-sliced
+    default measured 2.10x on the same decade with the same estimate
+    power).
 
     The banding S-curve MEASURED, not assumed: for each shipped
     banding preset (legacy 16/2, sharp 64/4 default, high-recall
@@ -4174,25 +4175,22 @@ def q_lsh_s_curve_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _s_curve_df(docs: DataFrame) -> DataFrame:
-    # words/exact are TRACKED persists (caching.py): they stay warm
-    # across a harness's repeated calls (bench median-of-3 measures
-    # steady state again — VERDICT r12 #1) and are released by the
-    # harness via release_tracked() / clearCache after the entry, not
-    # in-line here. The bounded result (presets x 10 buckets) is still
-    # materialized and returned as a local frame.
-    out, words, exact = _s_curve_plan(docs)
+    # words/exact/sig are persisted and left to the caller's
+    # clearCache (queries_registry EXECUTION PROTOCOL): a repeated call
+    # re-persists the same logical plans, which the CacheManager serves
+    # from the live caches (bench median-of-3 measures steady state —
+    # VERDICT r12 #1). The bounded result (presets x 10 buckets) is
+    # still materialized and returned as a local frame.
+    out = _s_curve_plan(docs)
     rows = out.collect()  # bounded: |presets| x 10 buckets
     return docs.sparkSession.createDataFrame(rows, out.schema)
 
 
 def _s_curve_plan(docs: DataFrame):
-    """The LAZY curve frame plus its persisted intermediates (words,
-    exact) — split out so the plan pins can explain() the distributed
-    plan (the entry returns a materialized local frame); the persists
-    are tracked (caching.py) and released by the harness."""
-    from .caching import tracked_persist
-
-    words = tracked_persist(D._words_df(docs))
+    """The LAZY curve frame over persisted words/exact/sig tables —
+    split out so the plan pins can explain() the distributed plan (the
+    entry returns a materialized local frame)."""
+    words = D._words_df(docs).persist()
     exact = (
         D.ngram_jaccard_pairs(
             docs,
@@ -4209,7 +4207,7 @@ def _s_curve_plan(docs: DataFrame):
             .alias("j_bucket"),
         )
     )
-    exact = tracked_persist(exact)
+    exact = exact.persist()
 
     def sq_chain(col, squarings):
         for _ in range(squarings):
@@ -4225,7 +4223,7 @@ def _s_curve_plan(docs: DataFrame):
     # the entry's dominant cost (3 folds of 16+64+128 hashes vs one
     # of 128).
     max_h = max(h for _, h, _ in _S_CURVE_PRESETS)
-    sig = tracked_persist(D._minhash_sig_arr(words, 3, max_h))
+    sig = D._minhash_sig_arr(words, 3, max_h).persist()
 
     out = None
     for label, h, r in _S_CURVE_PRESETS:
@@ -4257,7 +4255,7 @@ def _s_curve_plan(docs: DataFrame):
             "theory_capture"
         ),
     ).orderBy("preset", "j_bucket")
-    return out, words, exact
+    return out
 
 
 def _s_curve_sampled_sql(permille: int = 250) -> str:

@@ -68,6 +68,11 @@ def adapt_table(df: DataFrame, name: str) -> DataFrame:
 # TIMESTAMP_NTZ for MICROS).
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
 
+# Spark jobs spent inferring schemas into that memo, process-wide: the
+# registry's plan-memo purity check discounts them, because a build
+# that only populated the memo built the same plan as every later one.
+_inference_jobs = 0
+
 
 _ROW_COUNT_CACHE: dict[tuple, int] = {}
 
@@ -143,6 +148,7 @@ def pin_parity_confs(spark: SparkSession) -> None:
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    global _inference_jobs
     # Pin the inference-relevant conf HERE, not only in load_table
     # (ADVICE r15): the memoized schema must be conf-correct no matter
     # which caller populates the cache first.
@@ -150,7 +156,10 @@ def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     key = _file_state_key(path)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        jobs0 = dag.numTotalJobs()
         sch = spark.read.parquet(path).schema
+        _inference_jobs += dag.numTotalJobs() - jobs0
         _SCHEMA_CACHE[key] = sch
     return sch
 

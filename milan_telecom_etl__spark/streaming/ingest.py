@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,14 +95,19 @@ def _drain(stream_df: DataFrame, mode: str) -> DataFrame:
 
 
 def dedupe_stream(
-    stream: DataFrame, ts_col: str = "ts", key: str = "event_id", watermark: str = "2 hours"
+    stream: DataFrame,
+    ts_col: str = "ts",
+    keys: Sequence[str] = ("event_id",),
+    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming exactly-once dedupe: drop re-deliveries of the same key
-    arriving within the watermark horizon. State is bounded by the
-    watermark (old keys age out) — the at-least-once → exactly-once
+    columns arriving within the watermark horizon. State is bounded by
+    the watermark (old keys age out) — the at-least-once → exactly-once
     repair for replayed sources; unbounded dropDuplicates would grow
     state forever on a 100 TB/day stream."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark([key])
+    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        list(keys)
+    )
 
 
 def interval_join_streams(

@@ -35,7 +35,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as m
-    from milan_telecom_etl__spark.caching import release_tracked
     from tests.parity import compare, duck_connection
 
     con = duck_connection(sf_dir)
@@ -48,7 +47,6 @@ def main() -> int:
             # entries legitimately persist shared subtrees and rely on
             # the harness clearing between entries (EXECUTION PROTOCOL)
             spark.catalog.clearCache()
-            release_tracked()
             df = fn(spark, sf_dir)
             if name in oracles:
                 ok, msg = compare(df, con, oracles[name])

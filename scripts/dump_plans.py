@@ -19,7 +19,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from milan_telecom_etl__spark.caching import release_tracked
 from milan_telecom_etl__spark.session import get_spark
 
 
@@ -55,8 +54,6 @@ def main() -> int:
             print(f"FAIL {name}: {e}", file=sys.stderr)
             rc = 1
             continue
-        finally:
-            release_tracked()
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)

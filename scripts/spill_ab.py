@@ -57,12 +57,6 @@ def main() -> int:
         rec["confs"] = confs
         rec["default_parallelism"] = spark.sparkContext.defaultParallelism
         print(f"leg{i}", json.dumps(rec), flush=True)
-        # drop tracked persists BEFORE the session dies so the
-        # process-global _TRACKED list never holds frames bound to a
-        # stopped SparkContext (ADVICE r13 #3)
-        from milan_telecom_etl__spark.caching import release_tracked
-
-        release_tracked()
         spark.stop()
     return 0
 

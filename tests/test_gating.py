@@ -147,11 +147,16 @@ def test_fn_fingerprint_discriminates_within_a_module(monkeypatch):
 
 
 def test_fn_fingerprint_reads_false_for_unedited_fn_at_head():
-    # real-git smoke: a committed entry fn vs HEAD must read unchanged
-    # (this test breaks only if run with uncommitted edits to the
-    # sampled module — keep it on a module this round doesn't touch)
+    # real-git smoke: a committed entry fn vs HEAD must read unchanged.
+    # The universal modules are excluded exactly as classify_gates
+    # excludes them, so only an uncommitted edit to the sampled
+    # module's own closure can flip it
     name = _pick("registry_geo")
-    res = gating.fn_changed_since(QUERIES[name], "HEAD")
+    uni = frozenset(
+        gating._file_to_dotted(p)
+        for p in gating.universal_dep_files(QUERIES)
+    )
+    res = gating.fn_changed_since(QUERIES[name], "HEAD", uni)
     assert res is False
 
 

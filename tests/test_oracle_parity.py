@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from milan_telecom_etl__spark import caching
 from milan_telecom_etl__spark.queries_registry import _PLAN_MEMO
 from tests.parity import compare, duck_connection
 
@@ -23,7 +22,6 @@ def test_query_matches_oracle(spark, name, sql):
     # the registry's execution protocol; the plan memo keeps a build
     # only when no cache entry exists
     spark.catalog.clearCache()
-    caching.release_tracked()
     q = entrymod.queries()[name]
     df = q(spark, SF_DIR)
     con = duck_connection(SF_DIR)
@@ -45,9 +43,9 @@ def test_entry_smoke(spark):
 
 
 def _diagnostic_cases():
-    """Opt-in diagnostic twins (SPARK_GRAFT_FULL_EVALS): parity-checked
-    from the always-populated side registries so their oracle SQL
-    cannot rot while gated out of the driver surface (ADVICE r11 #4)."""
+    """Diagnostic twins: parity-checked from the side registries so
+    their oracle SQL cannot rot while outside the driver surface
+    (ADVICE r11 #4)."""
     from milan_telecom_etl__spark.queries_registry import (
         DIAGNOSTIC_ORACLES,
         DIAGNOSTIC_QUERIES,

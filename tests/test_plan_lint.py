@@ -71,13 +71,6 @@ UDTF_PICKLE_OK = {
 }
 
 
-def _reset(spark) -> None:
-    from milan_telecom_etl__spark.caching import release_tracked
-
-    spark.catalog.clearCache()
-    release_tracked()
-
-
 def exchange_counts(spark, df) -> tuple[int, int]:
     """(ShuffleExchange, BroadcastExchange) nodes in a fresh physical
     plan of `df`, planned with auto-broadcast off."""
@@ -103,11 +96,11 @@ def registry_plans(spark):
 
     plans, work = {}, {}
     for name, fn in m.queries().items():
-        _reset(spark)
+        spark.catalog.clearCache()
         df = fn(spark, SF)
         plans[name] = df._jdf.queryExecution().executedPlan().toString()
         work[name] = exchange_counts(spark, df)
-        _reset(spark)
+        spark.catalog.clearCache()
     return plans, work
 
 

@@ -13,7 +13,6 @@ import sys
 import pytest
 
 import __spark_entry__ as entrymod
-from milan_telecom_etl__spark import caching
 from milan_telecom_etl__spark.queries_registry import _PLAN_MEMO
 from perfbench.workloads import QUERY_MIX
 from tests.parity import compare, duck_connection
@@ -24,13 +23,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _call(spark, name: str, sf_dir: str):
     # the purity guard keeps a build only when no cache entry exists
     spark.catalog.clearCache()
-    caching.release_tracked()
     return entrymod.queries()[name](spark, sf_dir)
 
 
 def _warm(spark, name: str, sf_dir: str):
-    """Two calls, then the memo-served third; a first build may run the
-    one-off schema-inference job and is then not kept."""
+    """Two calls, then the memo-served third; a first build may run a
+    one-off job (a shared training step) and is then not kept."""
     _call(spark, name, sf_dir)
     warm = _call(spark, name, sf_dir)
     assert _call(spark, name, sf_dir) is warm, f"{name}: warm call rebuilt"

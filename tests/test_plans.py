@@ -26,9 +26,11 @@ def _clean_block_cache(spark):
     test's subtree substitutes a cache scan for the pinned FileScan/
     broadcast shape (first seen r7: knn_method_eval's persisted
     embeddings flipping test_semdedup_two_level_plan_stays_broadcast
-    under full-suite ordering only)."""
+    under full-suite ordering only). Cleared again after each test, so
+    the persists a test leaves never reach the next module."""
     spark.catalog.clearCache()
     yield
+    spark.catalog.clearCache()
 
 
 def _plan(df) -> str:
@@ -636,18 +638,12 @@ def test_s_curve_single_corpus_scan(spark):
     from milan_telecom_etl__spark.registry_text import _s_curve_plan
     from milan_telecom_etl__spark.sources.parquet import load_table
 
-    out, words, exact = _s_curve_plan(load_table(spark, SF, "documents"))
-    try:
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            out.explain("formatted")
-        scan_ids = set(re.findall(r"\((\d+)\) Scan parquet", buf.getvalue()))
-        assert len(scan_ids) <= 1, (
-            f"lsh_s_curve re-scans documents: {sorted(scan_ids)}"
-        )
-    finally:
-        words.unpersist()
-        exact.unpersist()
+    out = _s_curve_plan(load_table(spark, SF, "documents"))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        out.explain("formatted")
+    scan_ids = set(re.findall(r"\((\d+)\) Scan parquet", buf.getvalue()))
+    assert len(scan_ids) <= 1, f"lsh_s_curve re-scans documents: {sorted(scan_ids)}"
 
 
 def test_ivf_recall_curve_reuses_candidate_cache(spark):
@@ -658,13 +654,9 @@ def test_ivf_recall_curve_reuses_candidate_cache(spark):
         _ivf_recall_curve_plan,
     )
 
-    df, cand = _ivf_recall_curve_plan(spark, SF)
-    try:
-        df.count()  # materialize the candidate persist
-        plan = _plan(df)
-        assert "InMemoryTableScan" in plan, "candidate table no longer cached"
-    finally:
-        cand.unpersist()
+    df = _ivf_recall_curve_plan(spark, SF)
+    df.count()  # materialize the candidate persist
+    assert "InMemoryTableScan" in _plan(df), "candidate table no longer cached"
 
 
 def test_aqe_skew_join_fires_and_matches_salted(spark):
@@ -1323,58 +1315,31 @@ def test_bucketed_corrupt_schema_sidecar_falls_back_to_footer(spark):
         B._write_text(spark, sidecar, original)
 
 
-def test_tracked_persists_warm_across_reps_and_release(spark):
-    # VERDICT r12 #1: the materializing eval entries register their
-    # persisted subtrees with caching.tracked_persist — warm across a
-    # harness's repeated calls (second rep reuses the live
-    # InMemoryRelation), fully released by one release_tracked() call.
+def test_entry_persists_warm_across_reps_and_one_clear_cache(spark):
+    # VERDICT r12 #1: the materializing eval entries persist their
+    # shared subtrees and leave them to the caller — warm across a
+    # harness's repeated calls (a second call's persist of the same
+    # logical plan is served by the live InMemoryRelation, so it adds
+    # no cache), fully released by one clearCache() call.
     import __spark_entry__ as m
-    from milan_telecom_etl__spark import caching
 
     spark.catalog.clearCache()
-    caching.release_tracked()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    n0 = rdds().size()
     m.queries()["lsh_s_curve"](spark, SF).count()
-    first = list(caching._TRACKED)
-    assert len(first) == 3  # words + exact + shared wide signature
-    assert all(df.is_cached for df in first)
+    # words + exact + shared wide signature (+ the exact side's own
+    # shingle table)
+    n1 = rdds().size()
+    assert n1 >= n0 + 3
+    m.queries()["lsh_s_curve"](spark, SF).count()
+    assert rdds().size() == n1, "second rep re-cached its subtrees"
 
     m.queries()["knn_ivf_recall_curve"](spark, SF).count()
-    assert len(caching._TRACKED) == 4  # + candidate table
-    # second rep of the same entry re-registers the SAME logical plans;
-    # the CacheManager serves the live cache (warm rep), so the frames
-    # stay cached throughout
-    m.queries()["lsh_s_curve"](spark, SF).count()
-    assert all(df.is_cached for df in first)
+    assert rdds().size() == n1 + 1  # + candidate table
 
-    n = caching.release_tracked()
-    assert n >= 3 and not caching._TRACKED
-    assert not any(df.is_cached for df in first)
-
-
-def test_tracked_list_survives_dead_session_frames(spark):
-    # ADVICE r13 #3: _TRACKED is process-global and survives
-    # spark.stop() — in a multi-session process (scripts/spill_ab.py)
-    # the prune inside tracked_persist and the release loop must treat
-    # a frame bound to a stopped SparkContext as simply not cached,
-    # not raise into the entry under test.
-    from milan_telecom_etl__spark import caching
-
-    class _DeadFrame:
-        @property
-        def is_cached(self):
-            raise RuntimeError("SparkContext was shut down")
-
-        def unpersist(self):
-            raise RuntimeError("SparkContext was shut down")
-
-    caching.release_tracked()
-    caching._TRACKED.append(_DeadFrame())
-    live = caching.tracked_persist(spark.range(3))  # must not raise
-    assert live.is_cached
-    assert all(not isinstance(d, _DeadFrame) for d in caching._TRACKED)
-    caching._TRACKED.append(_DeadFrame())
-    caching.release_tracked()  # must not raise either
-    assert not caching._TRACKED and not live.is_cached
+    spark.catalog.clearCache()
+    assert cm.isEmpty() and rdds().size() == n0
 
 
 def test_exact_dedup_serves_from_bucketed_index_exchange_free(spark):

@@ -251,3 +251,32 @@ def test_register_testdata_sees_a_rewritten_table(spark, tmp_path):
         assert spark.table("events").count() == 9
     finally:
         spark.catalog.dropTempView("events")
+
+
+def test_top_cells_sql_registers_only_the_view_it_reads(spark, tmp_path):
+    # the SQL front door reads `events` only: on a cold file state its
+    # first build infers that one table's schema (one job), leaves no
+    # other testdata view behind, and is kept by the plan memo (schema
+    # inference is memoized metadata, not build work)
+    import shutil
+
+    import __spark_entry__ as m
+    from milan_telecom_etl__spark.schemas import TESTDATA_TABLES
+    from milan_telecom_etl__spark.sources import parquet
+
+    sf = str(tmp_path / "sf0.001")
+    shutil.copytree("/root/testdata/sf0.001", sf)
+    for t in TESTDATA_TABLES:
+        spark.catalog.dropTempView(t)
+    spark.catalog.clearCache()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    try:
+        jobs0 = dag.numTotalJobs()
+        first = m.queries()["top_cells_sql"](spark, sf)
+        assert dag.numTotalJobs() - jobs0 == 1
+        assert not spark.catalog.tableExists("customer")
+        assert m.queries()["top_cells_sql"](spark, sf) is first
+    finally:
+        spark.catalog.dropTempView("events")
+        # the views were dropped behind register_testdata's memo
+        parquet._REGISTERED.clear()

@@ -33,7 +33,6 @@ from .operators.cleansing import apply_fixups, title_trim
 from .operators.constraints import check_audit, fk_enforce, fk_violations, pk_duplicates
 from .plans.queries import star_join_revenue, top_cells_events
 from .plans.views import hourly_events
-from .sources import parquet as _parquet
 from .sources.parquet import _file_state_key, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -54,7 +53,7 @@ DIAGNOSTIC_ORACLES: dict[str, str] = {}
 # tree and re-analyzing it on every call, not by execution (the
 # build/analyze/plan/exec split of `perfbench/run.py --trace 1`, read
 # on one QueryExecution). For a build that is PURE in (spark, sf_dir),
-# the built DataFrame is metadata, exactly like the schema memo in
+# the built DataFrame is metadata, exactly like the footer memo in
 # sources/parquet.py: the same object can serve every call, and every
 # action on it still computes from the parquet inputs. A memo-served
 # frame also keeps its QueryExecution, so AQE's final plan is reused.
@@ -62,9 +61,8 @@ DIAGNOSTIC_ORACLES: dict[str, str] = {}
 #
 # Eligibility is derived from what each build did, per call:
 # - purity: the build launched no Spark job and registered no cache
-#   entry (`_build_is_pure`). The one-off schema-inference jobs that
-#   sources/parquet.py memoizes do not count. The check repeats per
-#   call instead of branding the entry;
+#   entry (`_build_is_pure`). The check repeats per call instead of
+#   branding the entry;
 # - inputs: every file of `df.inputFiles()` lies under sf_dir. Plans
 #   that read the artifact warehouse pin file listings outside it.
 # A kept frame is served while its key (name, sf_dir) and its state
@@ -80,8 +78,8 @@ _plan_memo_app: str | None = None
 
 def _build_is_pure(spark: SparkSession, build: Callable[[], DataFrame]):
     """Run `build()` under the purity watch: returns (df, pure) where
-    pure means no job ran but schema inference and the cache was empty
-    before and after construction."""
+    pure means no job ran and the cache was empty before and after
+    construction."""
     jsc = spark.sparkContext._jsc.sc()
     try:
         jobs0 = jsc.dagScheduler().numTotalJobs()
@@ -89,12 +87,10 @@ def _build_is_pure(spark: SparkSession, build: Callable[[], DataFrame]):
         jobs0 = None
     cm = spark._jsparkSession.sharedState().cacheManager()
     cache_empty0 = cm.isEmpty()
-    inferred0 = _parquet._inference_jobs
     df = build()
     pure = (
         jobs0 is not None
-        and jsc.dagScheduler().numTotalJobs() - jobs0
-        == _parquet._inference_jobs - inferred0
+        and jsc.dagScheduler().numTotalJobs() == jobs0
         and cache_empty0
         and cm.isEmpty()
     )
@@ -442,8 +438,8 @@ def q_top_cells_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql replaces the reference's pd.read_sql / execute_query
     (reference src/etl.py:295, src/database.py:136-154), incl.
     GROUP-BY-ordinal (spark.sql.groupByOrdinal, SURVEY.md A2)."""
-    # register only the view the SQL reads — registering the whole
-    # testdata set infers every table's schema on a cold file state
+    # register only the view the SQL reads: no other testdata view is
+    # left behind in the caller's session
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(
         """

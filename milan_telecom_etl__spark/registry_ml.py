@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .queries_registry import register
-from .sources.parquet import load_table
+from .sources.parquet import load_table, table_row_count
 
 _DIM = 64
 
@@ -201,11 +201,10 @@ def q_kmeans_parallel_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     i_par0 = inertia(
         assign_clusters(emb, kmeans_parallel_seeds(emb, k=k, rounds=2))
     )
-    n = emb.count()
     emb.unpersist()
     return spark.range(1).select(
         F.lit(k).cast("int").alias("k"),
-        F.lit(n).cast("long").alias("n_points"),
+        F.lit(table_row_count(sf_dir, "embeddings")).cast("long").alias("n_points"),
         F.lit(bool(i_par0 <= i_seed0 * (1.0 + 1e-9))).alias("parallel_not_worse"),
     )
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .queries_registry import register
-from .sources.parquet import load_table
+from .sources.parquet import load_table, table_row_count
 
 # Stable per-row hash in [0, 1000): md5 of the key with a salt so
 # different stages draw independent "randomness".
@@ -252,7 +252,10 @@ def q_simhash_band_candidates_auto(spark: SparkSession, sf_dir: str) -> DataFram
     dropped whole (stop-bucket guard, the max_shingle_df pattern)."""
     from .operators.dedup import simhash_band_candidates_auto
 
-    return simhash_band_candidates_auto(load_table(spark, sf_dir, "documents"))
+    return simhash_band_candidates_auto(
+        load_table(spark, sf_dir, "documents"),
+        n_docs=table_row_count(sf_dir, "documents"),
+    )
 
 
 _FULL_HASH_SQL = "('0x' || substr(md5('{salt}' || CAST({key} AS VARCHAR)), 1, 15))::BIGINT"

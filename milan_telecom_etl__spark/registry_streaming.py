@@ -45,12 +45,12 @@ def _stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """readStream over one of the driver's testdata parquets,
     normalized exactly like sources/parquet.load_table. A file stream
     takes a fixed user schema, so it gets the batch read's memoized
-    footer schema (no re-read of the footer per stream build, r15
-    optimization round) and then the same `adapt_table` (for events:
-    long nanos → floor µs, NTZ → session-TZ timestamp)."""
-    from .sources.parquet import _parquet_schema, adapt_table
+    footer schema and parity confs, then the same `adapt_table` (for
+    events: long nanos → floor µs, NTZ → session-TZ timestamp)."""
+    from .sources.parquet import _footer, adapt_table, pin_parity_confs
 
-    schema = _parquet_schema(spark, f"{sf_dir}/{name}.parquet")
+    pin_parity_confs(spark)
+    schema = _footer(f"{sf_dir}/{name}.parquet")[0]
     # file streams need a directory source; pathGlobFilter narrows the
     # listing to the one table file
     raw = (

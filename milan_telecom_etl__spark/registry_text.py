@@ -3665,9 +3665,9 @@ BPE_MERGE_ROUNDS = 8
 
 # One trained-BPE pass per (session, sf_dir file state, k, mode), shared
 # by the three BPE entries (VERDICT r9 #4 — each used to re-run the full
-# 8-round training, 3x ~2.5 s per sweep). Last-entry semantics like
-# sources.parquet._REGISTERED: a session change, another sf_dir or a
-# rewritten file under it retrains and releases the stale vocab. The cached value is (merges, vocab) with
+# 8-round training, 3x ~2.5 s per sweep). Last-entry semantics: a
+# session change, another sf_dir or a rewritten file under it retrains
+# and releases the stale vocab. The cached value is (merges, vocab) with
 # the vocab left PERSISTED for the session — vocabulary-grain, the
 # tokenizer-training shrink, exactly the artifact a production
 # pipeline trains once and reuses.

@@ -48,33 +48,14 @@ def adapt_table(df: DataFrame, name: str) -> DataFrame:
     return df
 
 
-# Inferred-schema memo keyed on (path, mtime, size): re-inferring a
-# table's schema re-reads parquet footers on EVERY DataFrame build —
-# measured ~130 ms per load_table call at sf0.1 vs ~25 ms with an
-# explicit schema (r15 optimization round), and a full 254-entry bench
-# sweep builds each entry 4x (warmup + median-of-3), so inference was
-# tens of seconds of pure metadata re-reads per sweep. At cluster scale
-# the same applies against object storage (a footer round-trip per
-# query per table). The memo holds SCHEMAS (metadata), never data or
-# results; the file-state key (every part file's name, mtime_ns, size
-# — nanosecond mtimes per ADVICE r15: a same-second same-size in-place
-# rewrite must still invalidate) drops it the moment any file changes;
-# and it is per-process, so every bench/oracle invocation still derives
-# everything from the parquet inputs. The first read per (file state)
-# infers under the confs `_parquet_schema` itself pins (nanosAsLong —
-# ADVICE r15: callers must not be able to poison the memo by probing
-# before load_table set them), so the memoized schema is exactly what
-# inference would return (long for TIMESTAMP(NANOS) under nanosAsLong,
-# TIMESTAMP_NTZ for MICROS).
-_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
-
-# Spark jobs spent inferring schemas into that memo, process-wide: the
-# registry's plan-memo purity check discounts them, because a build
-# that only populated the memo built the same plan as every later one.
-_inference_jobs = 0
-
-
-_ROW_COUNT_CACHE: dict[tuple, int] = {}
+# Footer memo: (schema, row count) per table file state (every part
+# file's name, mtime_ns, size; a same-second same-size in-place rewrite
+# must still invalidate). Both come from the parquet footers on the
+# driver, so a cold load_table launches no Spark job: the schema is the
+# first data file's, which is what Spark's own inference reads, and the
+# row count sums num_rows over every file. The memo holds metadata,
+# never data or results, and is per-process.
+_FOOTERS: dict[tuple, tuple[T.StructType, int]] = {}
 
 
 def _table_files(path: str) -> list[str]:
@@ -110,34 +91,65 @@ def _file_state_key(path: str) -> tuple:
     )
 
 
-def table_row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of a testdata table from parquet FOOTER metadata
-    (memoized per file state) — identical by construction to
-    `load_table(spark, sf_dir, name).count()` (plain parquet: footer
-    num_rows is exact, there are no deletes), without paying a Spark
-    job per call. The auto-sizing operators (LSH plane counts, semdedup
-    k) derive layout parameters from the raw table's cardinality; at
-    sf0.1 each such count() job measured ~0.4-0.66 s WARM, paid on
-    every bench rep of every auto entry (r15 optimization round). At
-    cluster scale the equivalent is deriving from catalog/footer
-    statistics instead of scanning. Directory tables (the at-scale
-    layout) sum footer num_rows across part files — the
-    `tier_bytes_uncompressed` per-file footer-sum pattern (VERDICT r15
-    #3). Pinned equal to count() for both layouts in
-    tests/test_sources.py."""
-    path = f"{sf_dir}/{name}.parquet"
+def _spark_type(at, physical) -> T.DataType:
+    """`from_arrow_type`, except for nanosecond timestamps, which Spark
+    types by their parquet physical type: INT96 reads as TIMESTAMP,
+    INT64 TIMESTAMP(NANOS) as long (what inference gives under
+    nanosAsLong; a declared long reads NANOS with it off too).
+    `physical` yields each leaf column's physical type in schema order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pa.types.is_struct(at):
+        return T.StructType(
+            [T.StructField(f.name, _spark_type(f.type, physical)) for f in at]
+        )
+    if isinstance(at, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
+        return T.ArrayType(_spark_type(at.value_type, physical))
+    if pa.types.is_map(at):
+        key = _spark_type(at.key_type, physical)
+        return T.MapType(key, _spark_type(at.item_type, physical))
+    leaf = next(physical)
+    if pa.types.is_timestamp(at) and at.unit == "ns":
+        return T.TimestampType() if leaf == "INT96" else T.LongType()
+    return from_arrow_type(at, prefer_timestamp_ntz=True)
+
+
+def _footer(path: str) -> tuple[T.StructType, int]:
+    """(schema, rows) of a parquet table path, memoized per file state.
+    The schema equals what Spark's parquet inference returns, up to the
+    nullability Spark drops from a user schema itself; a partitioned
+    directory's key=value columns are not in the footer and Spark
+    appends them from the paths."""
     key = _file_state_key(path)
-    n = _ROW_COUNT_CACHE.get(key)
-    if n is None:
+    hit = _FOOTERS.get(key)
+    if hit is None:
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        n = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in _table_files(path)
-            if f.endswith(".parquet")
-        )
-        _ROW_COUNT_CACHE[key] = n
-    return n
+        files = [f for f in _table_files(path) if f.endswith(".parquet")]
+        if not files:
+            raise FileNotFoundError(f"no parquet data files at {path}")
+        first = pq.ParquetFile(files[0])
+        physical = (c.physical_type for c in first.schema)
+        schema = _spark_type(pa.struct(list(first.schema_arrow)), physical)
+        rows = sum(pq.read_metadata(f).num_rows for f in files)
+        hit = _FOOTERS[key] = (schema, rows)
+    return hit
+
+
+def table_row_count(sf_dir: str, name: str) -> int:
+    """Exact row count of a testdata table from its footer memo —
+    identical by construction to `load_table(spark, sf_dir, name).count()`
+    (plain parquet: footer num_rows is exact, there are no deletes),
+    without paying a Spark job per call. The auto-sizing operators (LSH
+    plane counts, semdedup k) derive layout parameters from the raw
+    table's cardinality; at sf0.1 each such count() job measured
+    ~0.4-0.66 s WARM (r15 optimization round). At cluster scale the
+    equivalent is deriving from catalog/footer statistics instead of
+    scanning. Pinned equal to count() for both layouts in
+    tests/test_sources.py."""
+    return _footer(f"{sf_dir}/{name}.parquet")[1]
 
 
 def pin_parity_confs(spark: SparkSession) -> None:
@@ -147,51 +159,17 @@ def pin_parity_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def _parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    global _inference_jobs
-    # Pin the inference-relevant conf HERE, not only in load_table
-    # (ADVICE r15): the memoized schema must be conf-correct no matter
-    # which caller populates the cache first.
-    pin_parity_confs(spark)
-    key = _file_state_key(path)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        dag = spark.sparkContext._jsc.sc().dagScheduler()
-        jobs0 = dag.numTotalJobs()
-        sch = spark.read.parquet(path).schema
-        _inference_jobs += dag.numTotalJobs() - jobs0
-        _SCHEMA_CACHE[key] = sch
-    return sch
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    return adapt_table(
-        spark.read.schema(_parquet_schema(spark, path)).parquet(path), name
-    )
+    pin_parity_confs(spark)
+    return adapt_table(spark.read.schema(_footer(path)[0]).parquet(path), name)
 
 
-# last-registered sf_dir file state per session (app id) —
-# re-registering on every SQL-front-door call re-reads 10 parquet
-# footers per run, the fixed ~0.3 s that made top_cells_sql ~2x the
-# DataFrame flagship (VERDICT r8 #8). Any change of dir or of a file
-# under it re-registers: a view's file index is frozen at first read.
-_REGISTERED: dict[str, tuple] = {}
-
-
-def register_testdata(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, force: bool = False
-) -> None:
+def register_testdata(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every testdata parquet as a temp view (same names DuckDB
-    pre-registers for the oracle). Idempotent while the session's
-    registered sf_dir and its files are unchanged — pass force=True
-    after dropping views manually."""
-    app = spark.sparkContext.applicationId
-    state = _file_state_key(sf_dir)
-    if not force and _REGISTERED.get(app) == state:
-        return
+    pre-registers for the oracle). Every call re-registers: a view's
+    file index is frozen at its first read, and registering reads only
+    the memoized footers."""
     for name in TESTDATA_TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        if os.path.exists(path):
+        if os.path.exists(f"{sf_dir}/{name}.parquet"):
             load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _REGISTERED[app] = state

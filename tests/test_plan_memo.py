@@ -36,8 +36,6 @@ def _warm(spark, name: str, sf_dir: str):
 
 
 def test_warm_calls_are_hits(spark, sf_dir):
-    for n in QUERY_MIX:  # warm-up: first builds may infer table schemas
-        _call(spark, n, sf_dir)
     first = {n: _call(spark, n, sf_dir) for n in QUERY_MIX}
     rebuilt = [n for n in QUERY_MIX if _call(spark, n, sf_dir) is not first[n]]
     # the streaming drain runs its micro-batch while building

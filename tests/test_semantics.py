@@ -2851,10 +2851,9 @@ def test_driver_side_round_matches_spark_round(spark):
     assert exact != got
 
 
-def test_register_testdata_memoization_tracks_dir_changes(spark):
-    """register_testdata is memoized per (session, LAST sf_dir) — the
-    top_cells_sql front-door fix — but an sf_dir CHANGE must
-    re-register (scale_bench alternates small/big in one session)."""
+def test_register_testdata_tracks_dir_changes(spark):
+    """An sf_dir change re-registers the views (scale_bench alternates
+    small/big in one session), and so does switching back."""
     from milan_telecom_etl__spark.sources.parquet import register_testdata
 
     register_testdata(spark, "/root/testdata/sf0.001")

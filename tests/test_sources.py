@@ -167,35 +167,89 @@ def test_binaryfile_media_ingest(spark, tmp_path):
     assert all(r["ok"] for r in decoded) and len(decoded) == 2
 
 
-def test_table_row_count_and_schema_memo_match_spark(spark):
-    """r15 optimization round: the footer-metadata row count the
-    auto-sizing operators consume must equal count() on the freshly
-    loaded table, and the memoized explicit-schema read must return
-    exactly the schema inference would — for every testdata table the
-    registry derives layout parameters from."""
+def _written_tables(spark, sf_dir) -> list[str]:
+    """Parquet layouts beyond the testdata's, written into `sf_dir`: a
+    pyarrow file with nanosecond timestamps (INT64 NANOS), a
+    Spark-written INT96 file with nested and typed columns, and a
+    partitionBy directory table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = pa.timestamp("ns")
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2], pa.int64()),
+            "t_ns": pa.array([1_700_000_000_123_456_789, None], ns),
+            "t_ns_utc": pa.array([1, 2], pa.timestamp("ns", tz="UTC")),
+            "t_us_utc": pa.array([1, 2], pa.timestamp("us", tz="UTC")),
+            "t_ms": pa.array([1, 2], pa.timestamp("ms")),
+            "ns_list": pa.array([[1, 2], []], pa.list_(ns)),
+        }),
+        f"{sf_dir}/nanos.parquet",
+    )
+    prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.range(5).selectExpr(
+            "id",
+            "timestamp_micros(id * 1000003) AS ts",
+            "array(cast(id AS int), null) AS arr",
+            "cast(id / 7 AS decimal(12, 3)) AS dec",
+            "date_add(DATE '2024-01-01', cast(id AS int)) AS d",
+            "cast(id AS short) AS sh",
+            "named_struct('a', id, 't', timestamp_micros(id)) AS st",
+            "map(cast(id AS string), id) AS m",
+            "array(named_struct('x', timestamp_micros(id))) AS arr_st",
+        ).coalesce(1).write.parquet(f"{sf_dir}/spark_types.parquet")
+    finally:
+        spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    spark.range(12).selectExpr(
+        "id", "cast(id % 3 AS int) AS k", "concat('v', id) AS v"
+    ).write.partitionBy("k").parquet(f"{sf_dir}/parted.parquet")
+    return ["nanos", "spark_types", "parted"]
+
+
+def test_table_row_count_and_schema_memo_match_spark(spark, tmp_path):
+    """The footer memo stands in for Spark's schema inference and
+    count(): on a cold file state load_table launches no job, its
+    schema is what inference gives (after the same adapt_table), and
+    the footer row count equals count(); for every testdata table and
+    for the layouts `_written_tables` writes."""
+    from milan_telecom_etl__spark.schemas import TESTDATA_TABLES
+    from milan_telecom_etl__spark.sources import parquet
     from milan_telecom_etl__spark.sources.parquet import (
-        _SCHEMA_CACHE,
+        adapt_table,
         load_table,
         table_row_count,
     )
 
-    from milan_telecom_etl__spark.sources.parquet import _file_state_key
-
-    sf = "/root/testdata/sf0.001"
-    for name in ("documents", "embeddings", "events"):
+    cases = [
+        (sf, t)
+        for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+        for t in TESTDATA_TABLES
+    ]
+    cases += [(str(tmp_path), t) for t in _written_tables(spark, str(tmp_path))]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for sf, name in cases:
+        parquet._FOOTERS.clear()
+        jobs0 = dag.numTotalJobs()
         df = load_table(spark, sf, name)
-        assert table_row_count(sf, name) == df.count(), name
-        # the memo is populated now; a fresh inference must agree
-        path = f"{sf}/{name}.parquet"
-        cached = _SCHEMA_CACHE[_file_state_key(path)]
-        assert spark.read.parquet(path).schema == cached, name
+        assert dag.numTotalJobs() == jobs0, (sf, name)
+        inferred = spark.read.parquet(f"{sf}/{name}.parquet")
+        assert df.schema == adapt_table(inferred, name).schema, (sf, name)
+        assert table_row_count(sf, name) == inferred.count(), (sf, name)
+    # the written layouts really exercise both nanosecond physical types
+    typed = load_table(spark, str(tmp_path), "spark_types").schema
+    assert typed["ts"].dataType == T.TimestampType()  # INT96
+    nanos = load_table(spark, str(tmp_path), "nanos").schema
+    assert nanos["t_ns"].dataType == T.LongType()  # INT64 NANOS
 
 
 def test_table_row_count_and_schema_on_directory_tables(spark, tmp_path):
     """VERDICT r15 #3: at the 100 TB posture every table is a DIRECTORY
     of parquet parts — the footer row count must sum per-file footers
-    (the tier_bytes_uncompressed pattern), the schema memo must read
-    the directory layout, and both memos must invalidate when a part
+    (the tier_bytes_uncompressed pattern), the footer schema must read
+    the directory layout, and the memo must invalidate when a part
     file changes."""
     import time
 
@@ -255,14 +309,12 @@ def test_register_testdata_sees_a_rewritten_table(spark, tmp_path):
 
 def test_top_cells_sql_registers_only_the_view_it_reads(spark, tmp_path):
     # the SQL front door reads `events` only: on a cold file state its
-    # first build infers that one table's schema (one job), leaves no
-    # other testdata view behind, and is kept by the plan memo (schema
-    # inference is memoized metadata, not build work)
+    # first build launches no job (the schema comes from the footer),
+    # leaves no other testdata view behind, and is kept by the plan memo
     import shutil
 
     import __spark_entry__ as m
     from milan_telecom_etl__spark.schemas import TESTDATA_TABLES
-    from milan_telecom_etl__spark.sources import parquet
 
     sf = str(tmp_path / "sf0.001")
     shutil.copytree("/root/testdata/sf0.001", sf)
@@ -273,10 +325,8 @@ def test_top_cells_sql_registers_only_the_view_it_reads(spark, tmp_path):
     try:
         jobs0 = dag.numTotalJobs()
         first = m.queries()["top_cells_sql"](spark, sf)
-        assert dag.numTotalJobs() - jobs0 == 1
+        assert dag.numTotalJobs() - jobs0 == 0
         assert not spark.catalog.tableExists("customer")
         assert m.queries()["top_cells_sql"](spark, sf) is first
     finally:
         spark.catalog.dropTempView("events")
-        # the views were dropped behind register_testdata's memo
-        parquet._REGISTERED.clear()

@@ -7,13 +7,15 @@ are STANDING artifacts, built offline from the already-ingested corpus,
 shipped to a warehouse path and LOADED at query time. Every such store
 here follows one rule, `refresh`:
 
-- identity is the corpus LOCATION plus the artifact's name; the
-  content it was built from is a per-file `_shards.json` manifest
-  (relative path -> [size, mtime_ms]) of the source table, listed
-  recursively through the Hadoop FileSystem;
-- no manifest, a corrupt one, a missing `_SUCCESS` (a build killed
-  half-way) or an orphaned `_append_pending` marker (a process killed
-  inside an append): rebuild in place;
+- identity is the corpus LOCATION plus the artifact's name; its one
+  manifest, `_shards.json` inside the artifact dir, records what it
+  holds: the source table's files it was built from (relative path ->
+  [size, mtime_ms], listed recursively through the Hadoop FileSystem)
+  and the Spark schema of the rows it wrote, so a serve reads with a
+  declared schema and runs no inference job;
+- no manifest, a corrupt one (its schema included), a missing
+  `_SUCCESS` (a build killed half-way) or an orphaned `_append_pending`
+  marker (a process killed inside an append): rebuild in place;
 - a recorded file changed or vanished: rebuild in place;
 - only new files: append them, when the store can (`append`
   callback); otherwise rebuild;
@@ -48,6 +50,7 @@ from typing import Callable
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -222,16 +225,15 @@ def refresh(
     rebuild: Callable[[], dict],
     append: Callable[[list[str], dict], None] | None = None,
     stale: Callable[[dict, dict], bool] | None = None,
-    data: str | None = None,
 ) -> dict:
     """Bring the standing artifact at `path` up to date with the source
     table and return its manifest. `rebuild()` writes the whole
-    artifact and returns the store's own manifest fields;
+    artifact and returns the store's own manifest fields, `schema`
+    (the written rows' `StructType.jsonValue()`) among them;
     `append(new_files, manifest)` adds only the new files' rows (no
     callback: growth rebuilds); `stale(manifest, current)` is a store's
     extra rebuild rule over a valid manifest and the source's current
-    listing. `data` is where the build's
-    `_SUCCESS` lands when it is not `path` itself.
+    listing.
 
     An append is two commits with no transaction between them (data,
     then manifest), so it is bracketed by an `_append_pending` marker:
@@ -242,11 +244,12 @@ def refresh(
     pending = fs_join(path, "_append_pending")
     current = _corpus_files(spark, sf_dir, table)
     manifest = None
-    if _fs_exists(spark, data or path):
+    if _fs_exists(spark, path):
         try:
             manifest = json.loads(_read_text(spark, manifest_path) or "null")
             manifest["files"] = dict(manifest["files"])
-        except (ValueError, KeyError, TypeError):
+            T.StructType.fromJson(manifest["schema"])
+        except (ValueError, KeyError, TypeError, AttributeError):
             manifest = None  # absent, truncated or corrupt
     action, new_files = append_plan(
         None if manifest is None else manifest["files"], current
@@ -270,6 +273,12 @@ def refresh(
     return manifest
 
 
+def _serve(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
+    """The artifact's files, read with the schema its manifest
+    recorded: no inference job."""
+    return spark.read.schema(T.StructType.fromJson(manifest["schema"])).parquet(path)
+
+
 def load_or_build(
     spark: SparkSession,
     sf_dir: str,
@@ -285,11 +294,11 @@ def load_or_build(
     path = artifact_path(sf_dir, name)
 
     def rebuild() -> dict:
-        build().write.mode("overwrite").parquet(path)
-        return {}
+        df = build()
+        df.write.mode("overwrite").parquet(path)
+        return {"schema": df.schema.jsonValue()}
 
-    refresh(spark, sf_dir, table, path, rebuild)
-    return spark.read.parquet(path)
+    return _serve(spark, path, refresh(spark, sf_dir, table, path, rebuild))
 
 
 def load_or_append_partials(
@@ -311,17 +320,17 @@ def load_or_append_partials(
     one-shot partials, so serving is refresh-order-independent. `build`
     receives raw file reads: pass one that normalizes what it needs
     (the HLL entry applies `sources.parquet.adapt_table` itself)."""
-    root = fs_join(artifact_root(), "partials", loc_key(sf_dir), name)
-    data = fs_join(root, "data")
+    path = fs_join(artifact_root(), "partials", loc_key(sf_dir), name)
 
     def rebuild() -> dict:
-        raw = spark.read.parquet(_table_base(sf_dir, table))
-        build(raw).write.mode("overwrite").parquet(data)
-        return {}
+        df = build(spark.read.parquet(_table_base(sf_dir, table)))
+        df.write.mode("overwrite").parquet(path)
+        return {"schema": df.schema.jsonValue()}
 
     def append(new_files: list[str], manifest: dict) -> None:
         raw = read_files(spark, sf_dir, table, new_files)
-        build(raw).write.mode("append").parquet(data)
+        build(raw).write.mode("append").parquet(path)
 
-    refresh(spark, sf_dir, table, root, rebuild, append, data=data)
-    return spark.read.parquet(data)
+    return _serve(
+        spark, path, refresh(spark, sf_dir, table, path, rebuild, append)
+    )

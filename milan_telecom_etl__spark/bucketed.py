@@ -36,11 +36,11 @@ about it:
   warehouse path). A FRESH session re-registers the existing files
   with `CREATE TABLE ... USING PARQUET CLUSTERED BY ... SORTED BY ...
   INTO n BUCKETS LOCATION path` — metadata-only, no rewrite, using
-  the schema PERSISTED at build time (`_schema.json` beside
-  `_SUCCESS`), never re-inferred from parquet footers (footer
-  round-trip inference can drift from the catalog schema for
-  annotated types — ADVICE r12 #4); a corrupt sidecar falls back to
-  the footers rather than failing the entry forever.
+  the catalog schema the build recorded in the artifact's manifest,
+  never re-inferred from parquet footers (footer round-trip inference
+  can drift from the catalog schema for annotated types — ADVICE r12
+  #4); a corrupt manifest rebuilds in place rather than failing the
+  entry forever.
 - At 100 TB the same statements run against an object store — every
   path is built with URI-aware joins (`fs_join`) and existence checks
   go through the Hadoop FileSystem, never os.path.
@@ -48,7 +48,6 @@ about it:
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,8 +55,6 @@ from pyspark.sql import types as T
 
 from .artifacts import (
     _hpath,
-    _read_text,
-    _write_text,
     artifact_root,
     canon_path,
     fs_join,
@@ -150,29 +147,20 @@ def layout_name(sf_dir: str, table: str, key: str, variant: str = "") -> str:
 
 
 def _register(
-    spark: SparkSession, name: str, path: str, key: str, n: int
+    spark: SparkSession, name: str, path: str, key: str, manifest: dict
 ) -> None:
     """Metadata-only catalog registration of existing bucketed files,
-    from the persisted `_schema.json` (footer inference only when the
-    sidecar is missing or corrupt)."""
+    with the width and schema their manifest recorded."""
     if spark.catalog.tableExists(name):
         return
-    schema = None
-    persisted = _read_text(spark, fs_join(path, "_schema.json"))
-    if persisted is not None:
-        try:
-            schema = T.StructType.fromJson(json.loads(persisted))
-        except (ValueError, KeyError, TypeError):
-            schema = None  # truncated/corrupt sidecar
-    if schema is None:
-        schema = spark.read.parquet(path).schema
     cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+        f"`{f.name}` {f.dataType.simpleString()}"
+        for f in T.StructType.fromJson(manifest["schema"]).fields
     )
     spark.sql(
         f"CREATE TABLE `{name}` ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {n} BUCKETS "
-        f"LOCATION '{path}'"
+        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
+        f"INTO {manifest['n']} BUCKETS LOCATION '{path}'"
     )
 
 
@@ -260,20 +248,15 @@ def appendable_bucketed_table(
         )
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
         write(load_table(spark, sf_dir, table), width, "overwrite")
-        # persist the exact catalog schema beside the committer marker
-        # so fresh-session re-registration never re-infers (ADVICE r12)
-        _write_text(
-            spark,
-            fs_join(path, "_schema.json"),
-            json.dumps(spark.table(name).schema.jsonValue()),
-        )
-        return {"n": width}
+        # the exact catalog schema, so fresh-session re-registration
+        # never re-infers (ADVICE r12)
+        return {"n": width, "schema": spark.table(name).schema.jsonValue()}
 
     def append(new_files: list[str], manifest: dict) -> None:
-        _register(spark, name, path, key, manifest["n"])
+        _register(spark, name, path, key, manifest)
         delta = adapt_table(read_files(spark, sf_dir, table, new_files), table)
         write(delta, manifest["n"], "append")
 
     manifest = refresh(spark, sf_dir, table, path, rebuild, append, stale)
-    _register(spark, name, path, key, manifest["n"])
+    _register(spark, name, path, key, manifest)
     return spark.table(name)

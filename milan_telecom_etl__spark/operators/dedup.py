@@ -1058,36 +1058,6 @@ def simhash_near_dup_candidates(
     return simhash_band_candidates_auto(docs, text_col, **kwargs)
 
 
-def _driver_union_find(spark, pair_rows) -> DataFrame:
-    """Exact connected components over a collected pair list: union-find
-    with path halving, then label every member with its component's min
-    doc_id — identical semantics to the distributed alternating-star
-    labeling and the oracle's recursive-CTE transitive closure. NOT on
-    any query path since r16 (VERDICT r15 #3 — the cluster path must
-    not collect); kept as the reference implementation the equality
-    tests pin `_cc_labels_alternating` against."""
-    parent: dict = {}
-
-    def find(x):
-        r = parent.setdefault(x, x)
-        while r != parent[r]:
-            parent[r] = parent[parent[r]]
-            r = parent[r]
-        return r
-
-    for row in pair_rows:
-        ra, rb = find(row[0]), find(row[1])
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    roots = {x: find(x) for x in parent}
-    for x, r in roots.items():
-        if r not in comp_min or x < comp_min[r]:
-            comp_min[r] = x
-    rows = [(x, comp_min[r]) for x, r in roots.items()]
-    return spark.createDataFrame(rows, "doc_id long, label long")
-
-
 # Above this many label-state rows the per-round helper joins stop
 # broadcasting and fall back to shuffle joins (the same threshold the
 # r3-r15 min-label loop used for its label state) — and, since r16,
@@ -1188,9 +1158,10 @@ def _cc_labels_alternating(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     Input: distinct (doc_a, doc_b) pairs, doc_a < doc_b. Returns
     (labels, n_edges) where labels is (doc_id, label) for every
     edge-touching node with label = the component's min doc_id —
-    identical semantics to `_driver_union_find` (pinned row-equal in
-    tests/test_semantics.py) and the oracle's recursive-CTE transitive
-    closure — or (None, 0) for an edgeless graph. NOTHING is collected:
+    identical semantics to a driver-side union-find (the reference
+    tests/test_semantics.py pins it row-equal against) and the
+    oracle's recursive-CTE transitive closure — or (None, 0) for an
+    edgeless graph. NOTHING is collected:
     state lives in executor caches, the per-round action is one
     set-equality aggregate, and the converged labels are snapshotted
     with localCheckpoint (executor-local; acceptable for state this

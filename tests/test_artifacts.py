@@ -13,6 +13,7 @@ from milan_telecom_etl__spark.artifacts import (
     artifact_path,
     load_or_build,
 )
+from milan_telecom_etl__spark.bucketed import appendable_bucketed_table, layout_name
 
 
 def _write_corpus(spark, path: str, n: int) -> None:
@@ -78,11 +79,6 @@ def test_nested_partition_growth_refreshes_both_stores(spark, tmp_path, monkeypa
     import glob
     import shutil
 
-    from milan_telecom_etl__spark.bucketed import (
-        appendable_bucketed_table,
-        layout_name,
-    )
-
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "wh"))
     sf = str(tmp_path / "sf")
     base = os.path.join(sf, "documents.parquet")
@@ -121,6 +117,87 @@ def test_nested_partition_growth_refreshes_both_stores(spark, tmp_path, monkeypa
         assert len([f for f in os.listdir(ipath) if f.startswith("part-")]) > 2
     finally:
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+
+
+def _hll_partials(spark, sf):
+    """The `hll_partial_append_serving` entry's partials store."""
+    from milan_telecom_etl__spark.artifacts import load_or_append_partials
+    from milan_telecom_etl__spark.registry_semistructured import HLL_LG_K
+    from milan_telecom_etl__spark.sources.parquet import adapt_table
+
+    def build(raw):
+        ev = adapt_table(raw, "events")
+        return ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+            F.hll_sketch_agg("user_id", HLL_LG_K).alias("sk")
+        )
+
+    return load_or_append_partials(
+        spark, sf, f"hll_user_partials_lgk{HLL_LG_K}", build, table="events"
+    )
+
+
+def _ivf_cells(spark, sf):
+    from milan_telecom_etl__spark.operators import similarity as S
+    from milan_telecom_etl__spark.sources.parquet import load_table
+
+    emb = load_table(spark, sf, "embeddings")
+    return load_or_build(
+        spark,
+        sf,
+        "ivf_cells_8",
+        lambda: S.ivf_cell_assignments(emb, n_cells=8),
+        table="embeddings",
+    )
+
+
+def _orders_index(spark, sf):
+    return appendable_bucketed_table(spark, sf, "orders", "o_orderkey")
+
+
+@pytest.mark.parametrize("serve", [_ivf_cells, _hll_partials, _orders_index])
+def test_store_serves_declare_the_written_schema(spark, tmp_path, monkeypatch, serve):
+    """Each store serves with the schema its manifest recorded at write
+    time: a warm call launches no Spark job, that schema is what
+    inference gives on the same files, and a manifest without a schema
+    (the earlier format) rebuilds exactly once and is then served."""
+    import glob
+    import json
+
+    from milan_telecom_etl__spark.artifacts import _read_text, _write_text
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
+    sf = "/root/testdata/sf0.001"
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def warm_jobs():
+        jobs0 = dag.numTotalJobs()
+        df = serve(spark, sf)
+        return dag.numTotalJobs() - jobs0, df
+
+    def built_ns():
+        return os.stat(os.path.join(adir, "_SUCCESS")).st_mtime_ns
+
+    try:
+        serve(spark, sf)
+        (manifest,) = glob.glob(str(tmp_path / "**" / "_shards.json"), recursive=True)
+        adir = os.path.dirname(manifest)
+        jobs, served = warm_jobs()
+        assert jobs == 0
+        assert served.schema == spark.read.parquet(adir).schema
+
+        stripped = json.loads(_read_text(spark, manifest))
+        del stripped["schema"]
+        _write_text(spark, manifest, json.dumps(stripped))
+        t0 = built_ns()
+        serve(spark, sf)
+        t1 = built_ns()
+        assert t1 != t0, "a manifest without a schema must rebuild"
+        jobs, again = warm_jobs()
+        assert jobs == 0 and built_ns() == t1
+        assert again.schema == served.schema
+        assert "schema" in json.loads(_read_text(spark, manifest))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS `{layout_name(sf, 'orders', 'o_orderkey')}`")
 
 
 def test_serving_entries_match_train_in_run_twins(spark):
@@ -271,7 +348,7 @@ def test_hll_partials_append_matches_rebuild(spark, tmp_path, monkeypatch):
     (store_root,) = os.listdir(str(tmp_path / "artA" / "partials"))
     droot = str(tmp_path / "artA" / "partials" / store_root)
     (store_name,) = os.listdir(droot)
-    data_dir = os.path.join(droot, store_name, "data")
+    data_dir = os.path.join(droot, store_name)
     base_parts = {
         f: os.stat(os.path.join(data_dir, f)).st_mtime_ns
         for f in os.listdir(data_dir)
@@ -305,28 +382,18 @@ def test_hll_partials_append_matches_rebuild(spark, tmp_path, monkeypatch):
     # mergeability: a from-scratch store on the grown corpus serves the
     # IDENTICAL estimate (HLL registers are max-merged — partitioning
     # of the input across batches cannot change the union state)
-    from milan_telecom_etl__spark.registry_semistructured import HLL_LG_K
-    from milan_telecom_etl__spark.artifacts import load_or_append_partials
-    from milan_telecom_etl__spark.sources.parquet import adapt_table
-
-    def build(raw):
-        ev2 = adapt_table(raw, "events")
-        return ev2.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-            F.hll_sketch_agg("user_id", HLL_LG_K).alias("sk")
-        )
-
-    def merged_est(root_env, store):
+    def merged_est(root_env):
         monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / root_env))
-        p = load_or_append_partials(spark, corp, store, build, table="events")
         return {
             r["event_type"]: r["est"]
-            for r in p.groupBy("event_type")
+            for r in _hll_partials(spark, corp)
+            .groupBy("event_type")
             .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"))
             .collect()
         }
 
     # artA's entry store went base-build -> append (two batches of
     # partial rows); artB builds one-shot on the grown corpus
-    appended = merged_est("artA", f"hll_user_partials_lgk{HLL_LG_K}")
-    rebuilt = merged_est("artB", f"hll_user_partials_lgk{HLL_LG_K}")
+    appended = merged_est("artA")
+    rebuilt = merged_est("artB")
     assert appended == rebuilt

@@ -882,8 +882,8 @@ def test_bucketed_derived_width_matches_law_on_testdata(spark):
 
 
 def test_bucketed_reregistration_never_reinfers_schema(spark, monkeypatch):
-    # fresh-session re-registration must come from the PERSISTED
-    # _schema.json, not parquet-footer inference (ADVICE r12 #4):
+    # fresh-session re-registration must come from the schema the
+    # manifest recorded, not parquet-footer inference (ADVICE r12 #4):
     # poison DataFrameReader.parquet and re-register anyway.
     import pyspark.sql.readwriter as RW
     from milan_telecom_etl__spark.bucketed import (
@@ -957,6 +957,7 @@ def test_appendable_index_serves_growth_without_rewriting_history(
     import os
 
     from milan_telecom_etl__spark import bucketed as B
+    from milan_telecom_etl__spark.artifacts import _read_text
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "art"))
     corp, tdir = _appendable_corpus(spark, tmp_path)
@@ -1004,7 +1005,7 @@ def test_appendable_index_serves_growth_without_rewriting_history(
         # and the manifest records both shards at the standing width
         import json as _json
 
-        manifest = _json.loads(B._read_text(spark, B.fs_join(ipath, "_shards.json")))
+        manifest = _json.loads(_read_text(spark, B.fs_join(ipath, "_shards.json")))
         assert manifest["n"] == 4
         assert set(manifest["files"]) == {"base-0.parquet", "delta-1.parquet"}
     finally:
@@ -1208,6 +1209,7 @@ def test_appendable_index_rebuilds_on_mutation_pending_and_width(
     import os
 
     from milan_telecom_etl__spark import bucketed as B
+    from milan_telecom_etl__spark.artifacts import _read_text, _write_text
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "art"))
     corp, tdir = _appendable_corpus(spark, tmp_path)
@@ -1226,9 +1228,9 @@ def test_appendable_index_rebuilds_on_mutation_pending_and_width(
         gen0 = {f for f in os.listdir(ipath) if f.endswith(".parquet")}
 
         # 1. orphaned append marker -> whole-or-rebuild
-        B._write_text(spark, B.fs_join(ipath, "_append_pending"), "[]")
+        _write_text(spark, B.fs_join(ipath, "_append_pending"), "[]")
         serve()
-        assert B._read_text(spark, B.fs_join(ipath, "_append_pending")) is None
+        assert _read_text(spark, B.fs_join(ipath, "_append_pending")) is None
         gen1 = {f for f in os.listdir(ipath) if f.endswith(".parquet")}
         assert gen1 != gen0  # rebuilt, not served as-is
 
@@ -1253,7 +1255,7 @@ def test_appendable_index_rebuilds_on_mutation_pending_and_width(
                      if not f.startswith((".", "_")))
         monkeypatch.setattr(B, "_derive_n", lambda nbytes, par: 8 if nbytes == listed else 2)
         serve()
-        manifest = _json.loads(B._read_text(spark, B.fs_join(ipath, "_shards.json")))
+        manifest = _json.loads(_read_text(spark, B.fs_join(ipath, "_shards.json")))
         assert manifest["n"] == 8
     finally:
         if "bdir" in locals():
@@ -1268,13 +1270,14 @@ def test_appendable_explicit_width_change_rebuilds(spark, tmp_path, monkeypatch)
     import os
 
     from milan_telecom_etl__spark import bucketed as B
+    from milan_telecom_etl__spark.artifacts import _read_text
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
     name = B.layout_name(SF, "orders", "o_orderkey")
     path = os.path.join(str(tmp_path), "bucketed", name)
 
     def stored():
-        manifest = _json.loads(B._read_text(spark, B.fs_join(path, "_shards.json")))
+        manifest = _json.loads(_read_text(spark, B.fs_join(path, "_shards.json")))
         parts = [f for f in os.listdir(path) if f.startswith("part-")]
         return manifest["n"], len(parts)
 
@@ -1293,26 +1296,54 @@ def test_appendable_explicit_width_change_rebuilds(spark, tmp_path, monkeypatch)
         spark.sql(f"DROP TABLE IF EXISTS `{name}`")
 
 
-def test_bucketed_corrupt_schema_sidecar_falls_back_to_footer(spark):
+@pytest.mark.parametrize("store", ["bucketed", "load_or_build"])
+def test_corrupt_manifest_rebuilds_in_place(spark, tmp_path, monkeypatch, store):
     # ADVICE r13 #2: a writer killed mid-write (pre-atomic builds)
-    # could leave a truncated _schema.json; re-registration must fall
-    # back to footer inference, not raise forever until manual cleanup.
-    from milan_telecom_etl__spark import bucketed as B
+    # could leave a truncated manifest; the next call must rebuild in
+    # place and serve the same schema and rows, not raise forever until
+    # manual cleanup.
+    from collections import Counter
 
-    built = B.appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
+    from milan_telecom_etl__spark import bucketed as B
+    from milan_telecom_etl__spark.artifacts import (
+        _read_text,
+        _write_text,
+        artifact_path,
+        load_or_build,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path))
     name = B.layout_name(SF, "orders", "o_orderkey")
-    path = B.fs_join(B.artifact_root(), "bucketed", name)
-    sidecar = B.fs_join(path, "_schema.json")
-    original = B._read_text(spark, sidecar)
-    assert original is not None
+    if store == "bucketed":
+        path = B.fs_join(B.artifact_root(), "bucketed", name)
+        serve = lambda: B.appendable_bucketed_table(  # noqa: E731
+            spark, SF, "orders", "o_orderkey"
+        )
+    else:
+        path = artifact_path(SF, "orders_by_status")
+        serve = lambda: load_or_build(  # noqa: E731
+            spark,
+            SF,
+            "orders_by_status",
+            lambda: load_table(spark, SF, "orders").groupBy("o_orderstatus").count(),
+            table="orders",
+        )
+    manifest = B.fs_join(path, "_shards.json")
     try:
-        B._write_text(spark, sidecar, original[: len(original) // 2])
-        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        df = B.appendable_bucketed_table(spark, SF, "orders", "o_orderkey")
+        built = serve()
+        rows = Counter(built.collect())
+        original = _read_text(spark, manifest)
+        assert original is not None
+        _write_text(spark, manifest, original[: len(original) // 2])
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")  # a fresh session
+        df = serve()
         assert df.schema == built.schema
-        assert "Exchange" not in _plan(df.groupBy("o_orderkey").count())
+        assert Counter(df.collect()) == rows
+        assert _read_text(spark, manifest) == original  # rebuilt in place
+        if store == "bucketed":
+            assert "Exchange" not in _plan(df.groupBy("o_orderkey").count())
     finally:
-        B._write_text(spark, sidecar, original)
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
 
 
 def test_entry_persists_warm_across_reps_and_one_clear_cache(spark):

@@ -294,6 +294,35 @@ def test_approx_distinct_within_tolerance(spark):
         assert rows[t]["within_3rsd"], (t, rows[t], n)
 
 
+def _driver_union_find(spark, pair_rows):
+    """Exact connected components over a collected pair list: union-find
+    with path halving, then label every member with its component's min
+    doc_id — identical semantics to the distributed alternating-star
+    labeling and the oracle's recursive-CTE transitive closure. The
+    reference the equality test pins `_cc_labels_alternating` against;
+    no query path collects its edges to the driver."""
+    parent: dict = {}
+
+    def find(x):
+        r = parent.setdefault(x, x)
+        while r != parent[r]:
+            parent[r] = parent[parent[r]]
+            r = parent[r]
+        return r
+
+    for row in pair_rows:
+        ra, rb = find(row[0]), find(row[1])
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict = {}
+    roots = {x: find(x) for x in parent}
+    for x, r in roots.items():
+        if r not in comp_min or x < comp_min[r]:
+            comp_min[r] = x
+    rows = [(x, comp_min[r]) for x, r in roots.items()]
+    return spark.createDataFrame(rows, "doc_id long, label long")
+
+
 def test_alternating_cc_row_equal_to_union_find(spark):
     """r16 (VERDICT r15 #3): the distributed large-star/small-star
     component labeling that replaced the driver-side union-find on the
@@ -306,7 +335,6 @@ def test_alternating_cc_row_equal_to_union_find(spark):
     from milan_telecom_etl__spark.operators.dedup import (
         _cc_labels,
         _cc_labels_alternating,
-        _driver_union_find,
     )
 
     rng = random.Random(42)

@@ -333,6 +333,21 @@ def dedup_span_excise(
     )
 
 
+def _drop_stop_shingles(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
+    """The stop-shingle cap: drop the shingles of `sh` whose document
+    frequency exceeds `max_shingle_df` (broadcast left-anti join against
+    the heavy set). `None` returns `sh` unchanged."""
+    if max_shingle_df is None:
+        return sh
+    heavy = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_shingle_df)
+        .select("shingle")
+    )
+    return sh.join(F.broadcast(heavy), "shingle", "left_anti")
+
+
 def shingle_table(
     docs: DataFrame,
     text_col: str = "text",
@@ -353,15 +368,49 @@ def shingle_table(
     sh = w.select(
         "doc_id", F.explode(shingles_of(F.col("__words"), n)).alias("shingle")
     )
-    if max_shingle_df is not None:
-        heavy = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(heavy), "shingle", "left_anti")
-    return sh
+    return _drop_stop_shingles(sh, max_shingle_df)
+
+
+def _shared_shingles(pairs: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, n_common) for every pair of `pairs` sharing >= 1 shingle:
+    side a's shingle rows, semi-matched against side b's on
+    (b, shingle). Pairs with no shared shingle drop out."""
+    return (
+        pairs.join(sh.select(F.col("doc_id").alias(a), "shingle"), a)
+        .join(sh.select(F.col("doc_id").alias(b), "shingle"), [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def _with_sizes(inter: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """`inter` plus size_a / size_b: each side's shingle count in `sh`."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
+    sa = sizes.select(F.col("doc_id").alias(a), F.col("n_shingles").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias(b), F.col("n_shingles").alias("size_b"))
+    return inter.join(sa, a).join(sb, b)
+
+
+def _jaccard_at_least(overlap: DataFrame, threshold: float) -> DataFrame:
+    """Adds jaccard = n_common / (size_a + size_b - n_common), rounded
+    to 6 places, and keeps the rows at or above `threshold`."""
+    jac = F.round(
+        F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")), 6
+    )
+    return overlap.withColumn("jaccard", jac).filter(F.col("jaccard") >= threshold)
+
+
+def _containment_at_least(
+    overlap: DataFrame, threshold: float, c_a: str, c_b: str
+) -> DataFrame:
+    """Adds both directed containments, c_a = n_common / size_a and
+    c_b = n_common / size_b (rounded to 6 places), and keeps the rows
+    whose larger one is at or above `threshold`."""
+    return (
+        overlap.withColumn(c_a, F.round(F.col("n_common") / F.col("size_a"), 6))
+        .withColumn(c_b, F.round(F.col("n_common") / F.col("size_b"), 6))
+        .filter(F.greatest(F.col(c_a), F.col(c_b)) >= threshold)
+    )
 
 
 def ngram_jaccard_pairs(
@@ -385,7 +434,6 @@ def ngram_jaccard_pairs(
     # sides + the per-doc sizes); without it the regex-normalize +
     # explode upstream runs three times.
     sh = shingle_table(docs, text_col, n, max_shingle_df, words).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -394,19 +442,9 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
+    overlap = _with_sizes(inter, sh, "doc_a", "doc_b")
+    return _jaccard_at_least(overlap, threshold).select(
+        "doc_a", "doc_b", "n_common", "jaccard"
     )
 
 
@@ -435,7 +473,8 @@ def _minhash_sig_arr(w: DataFrame, n: int, num_hashes: int) -> DataFrame:
     the shingle array: acc starts at [P31]*k and each shingle zips in
     `least(acc_i, h_i(x))`. The (a_i, b_i) table ships as a single
     nested-array Literal (the `sign_bits` discipline — one constant
-    reference in codegen, not k expression trees), and the shingle's
+    reference in codegen, not k expression trees), parsed from one SQL
+    string (one driver→JVM call, not ~3 per hash), and the shingle's
     md5 is bound ONCE per shingle via a 1-element `transform` acting as
     a let-binding (an inline `_md5_int60(s)` inside the per-param
     lambda would re-hash once per hash function — the 40× hazard
@@ -446,7 +485,8 @@ def _minhash_sig_arr(w: DataFrame, n: int, num_hashes: int) -> DataFrame:
     former explode+groupBy shape dropped them.
     """
     p31 = F.lit(MERSENNE_31).cast("long")
-    params = F.lit([[a, b] for a, b in _hash_params(num_hashes)])
+    pairs = ", ".join(f"array({a}, {b})" for a, b in _hash_params(num_hashes))
+    params = F.expr(f"array({pairs})")
     init = F.array_repeat(p31, num_hashes)
     sig = F.aggregate(
         shingles_of(F.col("__words"), n),
@@ -521,7 +561,8 @@ def minhash_banded(
     a wider signature ARE this preset's signature (prefix property,
     test-pinned). Multi-preset evals (the S-curve) compute one widest
     signature and slice, instead of re-folding the shingle stream per
-    preset (VERDICT r13 #7)."""
+    preset (VERDICT r13 #7). The band array is ONE SQL expression
+    string, not a driver→JVM call per band element."""
     if sig is None:
         w = words if words is not None else _words_df(docs, text_col)
         sig = _minhash_sig_arr(w, n, num_hashes)
@@ -537,23 +578,17 @@ def minhash_banded(
                 "allows slicing NARROWER presets from a wider signature)"
             )
     n_bands = num_hashes // band_size
-    bands = [
-        F.struct(
-            F.lit(bi).alias("band_id"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.element_at(F.col("__sig"), bi * band_size + j + 1).cast("string")
-                        for j in range(band_size)
-                    ],
-                )
-            ).alias("band_hash"),
+
+    def band(bi: int) -> str:
+        vals = ", ".join(
+            f"CAST(element_at(`__sig`, {bi * band_size + j + 1}) AS STRING)"
+            for j in range(band_size)
         )
-        for bi in range(n_bands)
-    ]
+        return f"struct({bi} AS band_id, md5(concat_ws(',', {vals})) AS band_hash)"
+
+    bands = ", ".join(band(bi) for bi in range(n_bands))
     return sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("band")
+        "doc_id", F.expr(f"explode(array({bands}))").alias("band")
     ).select("doc_id", F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
 
 
@@ -650,33 +685,14 @@ def _incremental_verify(
     """Exact-Jaccard verify over the df-capped shingle table, restricted
     to the candidate probes — shared by both incremental forms so they
     cannot drift."""
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("new_doc"), "shingle"), "new_doc")
-        .join(
-            sh.select(F.col("doc_id").alias("dup_of"), "shingle"),
-            ["dup_of", "shingle"],
-        )
-        .groupBy("new_doc", "dup_of")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("new_doc"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("dup_of"), F.col("n_shingles").alias("size_b"))
-    jac = F.round(
-        F.col("n_common") / (F.col("size_a") + F.col("size_b") - F.col("n_common")), 6
-    )
-    return (
-        inter.join(sa, "new_doc")
-        .join(sb, "dup_of")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "new_doc",
-            "dup_of",
-            F.col("n_common").cast("long").alias("n_common"),
-            "jaccard",
-            (F.col("dup_of") >= F.lit(new_max_id)).alias("in_index"),
-        )
+    inter = _shared_shingles(cand, sh, "new_doc", "dup_of")
+    overlap = _with_sizes(inter, sh, "new_doc", "dup_of")
+    return _jaccard_at_least(overlap, threshold).select(
+        "new_doc",
+        "dup_of",
+        F.col("n_common").cast("long").alias("n_common"),
+        "jaccard",
+        (F.col("dup_of") >= F.lit(new_max_id)).alias("in_index"),
     )
 
 
@@ -728,16 +744,26 @@ def incremental_near_dups_serving(
     sh_all = index_shingles.select("doc_id", "shingle").unionByName(
         shingle_table(batch_docs, text_col, n, None, words)
     )
-    if max_shingle_df is not None:
-        heavy = (
-            sh_all.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        sh_all = sh_all.join(F.broadcast(heavy), "shingle", "left_anti")
-    sh = sh_all.persist()
+    sh = _drop_stop_shingles(sh_all, max_shingle_df).persist()
     return _incremental_verify(cand, sh, threshold, new_max_id)
+
+
+def _probe_shingles(sh: DataFrame, m_probes: int) -> DataFrame:
+    """(p_doc, shingle, n_probes): each doc's `m_probes` smallest-hash
+    shingles. The doc's own probe count rides along, so a tiny doc is
+    never held to more hits than it has probes."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("doc_id").orderBy(_md5_int60(F.col("shingle")))
+    return (
+        sh.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= m_probes)
+        .select(
+            F.col("doc_id").alias("p_doc"),
+            "shingle",
+            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_probes"),
+        )
+    )
 
 
 def containment_probe_candidates(
@@ -770,21 +796,8 @@ def containment_probe_candidates(
     on replicated scale data (single shared-trigram coincidences scale
     with the duplicate rate); min_hits = 2 kills the coincidence class
     while leaving the containment recall law intact."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("doc_id").orderBy(_md5_int60(F.col("shingle")))
-    ranked = shingles.withColumn("rk", F.row_number().over(w))
-    probes = ranked.filter(F.col("rk") <= m_probes).select(
-        F.col("doc_id").alias("p_doc"),
-        "shingle",
-        # the doc's own probe count rides along, so tiny docs aren't
-        # held to more hits than they have probes
-        F.count(F.lit(1))
-        .over(Window.partitionBy("doc_id"))
-        .alias("n_probes"),
-    )
     hits = (
-        probes.join(
+        _probe_shingles(shingles, m_probes).join(
             shingles.select(F.col("doc_id").alias("o_doc"), "shingle"), "shingle"
         )
         .filter(F.col("p_doc") != F.col("o_doc"))
@@ -843,30 +856,11 @@ def containment_pairs(
         cands = minhash_lsh_candidates(docs, text_col, n, num_hashes, band_size, words)
     else:
         raise ValueError(f"unknown containment candidate method: {method!r}")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    pair_sh = cands.join(
-        sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-    )
-    inter = (
-        pair_sh.join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
-    c_a = F.round(F.col("n_common") / F.col("size_a"), 6)
-    c_b = F.round(F.col("n_common") / F.col("size_b"), 6)
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("containment_a", c_a)
-        .withColumn("containment_b", c_b)
-        .filter(F.greatest(F.col("containment_a"), F.col("containment_b")) >= threshold)
-        .select("doc_a", "doc_b", "n_common", "containment_a", "containment_b")
-    )
+    inter = _shared_shingles(cands, sh, "doc_a", "doc_b")
+    overlap = _with_sizes(inter, sh, "doc_a", "doc_b")
+    return _containment_at_least(
+        overlap, threshold, "containment_a", "containment_b"
+    ).select("doc_a", "doc_b", "n_common", "containment_a", "containment_b")
 
 
 def index_compaction(
@@ -1079,7 +1073,7 @@ def _cc_labels_single_task(e: DataFrame) -> DataFrame:
     at small SF — measured r16, the alternating rounds made
     near_dup_clusters 2x slower than the old driver finish at sf0.1).
     Emits (doc_id, label) for every NON-ROOT edge-touching node —
-    byte-identical to `_cc_labels_alternating`'s converged min-star
+    byte-identical to `_cc_star_rounds`' converged min-star
     edges (pinned row-equal in tests/test_semantics.py)."""
     import pandas as pd
 
@@ -1110,14 +1104,11 @@ def _cc_labels_single_task(e: DataFrame) -> DataFrame:
     return e.repartition(1).mapInPandas(finish, "doc_id long, label long")
 
 
-def _cc_labels(pairs: DataFrame) -> tuple[DataFrame | None, int]:
-    """Component labels over a (doc_a, doc_b) pair frame, dispatching on
-    the verified edge count: below `_CC_BROADCAST_MAX_STATE` the
-    single-executor-task union-find finishes in one job; above it the
-    alternating-star rounds take over. Both paths run to fixpoint and
-    emit identical rows — (doc_id, label=component min) for every
-    non-root edge-touching node — and neither collects anything to the
-    driver."""
+def _cc_edges(pairs: DataFrame) -> tuple[DataFrame | None, int]:
+    """The oriented edge list (hi > lo, self-loops dropped, distinct)
+    over a (doc_a, doc_b) pair frame, persisted, and its size — one
+    count action. An edgeless graph returns (None, 0) with the cache
+    released."""
     e = (
         pairs.select(
             F.greatest(F.col("doc_a"), F.col("doc_b")).alias("hi"),
@@ -1131,6 +1122,20 @@ def _cc_labels(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     if n_edges == 0:
         e.unpersist()
         return None, 0
+    return e, n_edges
+
+
+def _cc_labels(pairs: DataFrame) -> tuple[DataFrame | None, int]:
+    """Component labels over a (doc_a, doc_b) pair frame, dispatching on
+    the verified edge count: below `_CC_BROADCAST_MAX_STATE` the
+    single-executor-task union-find finishes in one job; above it the
+    alternating-star rounds take over. Both paths run to fixpoint and
+    emit identical rows — (doc_id, label=component min) for every
+    non-root edge-touching node — and neither collects anything to the
+    driver."""
+    e, n_edges = _cc_edges(pairs)
+    if e is None:
+        return None, 0
     if n_edges < _CC_BROADCAST_MAX_STATE:
         # lazy localCheckpoint: the one Python task runs on the first
         # action and every later action reads the snapshot — the same
@@ -1139,12 +1144,20 @@ def _cc_labels(pairs: DataFrame) -> tuple[DataFrame | None, int]:
             _cc_labels_single_task(e).localCheckpoint(eager=False),
             n_edges,
         )
-    # at-scale path; the oriented edge prep above stays warm in the
-    # executor cache and the star loop's identical plan re-matches it
-    return _cc_labels_alternating(pairs)
+    return _cc_star_rounds(e, n_edges)
 
 
 def _cc_labels_alternating(pairs: DataFrame) -> tuple[DataFrame | None, int]:
+    """`_cc_labels` with the star rounds forced at any edge count — the
+    at-scale path on its own, so tests pin it row-equal against a
+    union-find on small graphs."""
+    e, n_edges = _cc_edges(pairs)
+    if e is None:
+        return None, 0
+    return _cc_star_rounds(e, n_edges)
+
+
+def _cc_star_rounds(e: DataFrame, n_edges: int) -> tuple[DataFrame, int]:
     """Distributed connected components by ALTERNATING LARGE-STAR /
     SMALL-STAR rounds (Kiveris, Lattanzi, Mirrokni, Rastogi,
     Vassilvitskii — "Connected Components in MapReduce and Beyond",
@@ -1155,13 +1168,12 @@ def _cc_labels_alternating(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     chains and 1-2 rounds on the dense near-clique components real
     dedup graphs consist of.
 
-    Input: distinct (doc_a, doc_b) pairs, doc_a < doc_b. Returns
-    (labels, n_edges) where labels is (doc_id, label) for every
-    edge-touching node with label = the component's min doc_id —
-    identical semantics to a driver-side union-find (the reference
-    tests/test_semantics.py pins it row-equal against) and the
-    oracle's recursive-CTE transitive closure — or (None, 0) for an
-    edgeless graph. NOTHING is collected:
+    Input: `_cc_edges`' persisted oriented edge list and its size.
+    Returns (labels, n_edges) where labels is (doc_id, label) for every
+    non-root edge-touching node with label = the component's min
+    doc_id — identical semantics to a driver-side union-find (the
+    reference tests/test_semantics.py pins it row-equal against) and
+    the oracle's recursive-CTE transitive closure. NOTHING is collected:
     state lives in executor caches, the per-round action is one
     set-equality aggregate, and the converged labels are snapshotted
     with localCheckpoint (executor-local; acceptable for state this
@@ -1186,19 +1198,6 @@ def _cc_labels_alternating(pairs: DataFrame) -> tuple[DataFrame | None, int]:
     aggs) when the state is too big to broadcast — at 100 TB the edge
     list is the verified near-dup pairs, orders of magnitude smaller
     than the corpus the LSH+verify stages already bounded."""
-    e = (
-        pairs.select(
-            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("hi"),
-            F.least(F.col("doc_a"), F.col("doc_b")).alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))  # drop self-loops defensively
-        .distinct()
-        .persist()
-    )
-    n_edges = e.count()
-    if n_edges == 0:
-        e.unpersist()
-        return None, 0
     small_state = n_edges < _CC_BROADCAST_MAX_STATE
 
     def hint(df: DataFrame) -> DataFrame:
@@ -1388,34 +1387,10 @@ def lsh_verified_pairs(
         words = _words_df(docs, text_col).persist()
     cands = minhash_lsh_candidates(docs, text_col, n, num_hashes, band_size, words)
     sh = shingle_table(docs, text_col, n, max_shingle_df, words).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # candidate pairs × shingles of side A, semi-matched against side B
-    pair_sh = cands.join(
-        sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-    )
-    inter = (
-        pair_sh.join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_shingles").alias("size_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("size_a") + F.col("size_b") - F.col("n_common")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "jaccard")
+    inter = _shared_shingles(cands, sh, "doc_a", "doc_b")
+    overlap = _with_sizes(inter, sh, "doc_a", "doc_b")
+    return _jaccard_at_least(overlap, threshold).select(
+        "doc_a", "doc_b", "n_common", "jaccard"
     )
 
 
@@ -1450,20 +1425,9 @@ def incremental_containment(
     within the batch keep-first applies (other < new_doc), against the
     index any hit counts. Output: (new_doc, other_doc, n_common,
     containment_new, containment_other, in_index)."""
-    from pyspark.sql.window import Window
-
     words = _words_df(docs, text_col).persist()
     sh = shingle_table(docs, text_col, n, max_shingle_df, words).persist()
-    w = Window.partitionBy("doc_id").orderBy(_md5_int60(F.col("shingle")))
-    probes = (
-        sh.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= m_probes)
-        .select(
-            F.col("doc_id").alias("p_doc"),
-            "shingle",
-            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_probes"),
-        )
-    )
+    probes = _probe_shingles(sh, m_probes)
     is_batch = lambda c: c < F.lit(new_max_id)  # noqa: E731
     # direction A: batch probes (broadcast) into the streaming corpus
     dir_a = (
@@ -1507,35 +1471,15 @@ def incremental_containment(
         )
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    inter = (
-        cands.join(sh.select(F.col("doc_id").alias("new_doc"), "shingle"), "new_doc")
-        .join(
-            sh.select(F.col("doc_id").alias("other_doc"), "shingle"),
-            ["other_doc", "shingle"],
-        )
-        .groupBy("new_doc", "other_doc")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("new_doc"), F.col("n_shingles").alias("size_a"))
-    sb = sizes.select(F.col("doc_id").alias("other_doc"), F.col("n_shingles").alias("size_b"))
-    c_new = F.round(F.col("n_common") / F.col("size_a"), 6)
-    c_other = F.round(F.col("n_common") / F.col("size_b"), 6)
-    return (
-        inter.join(sa, "new_doc")
-        .join(sb, "other_doc")
-        .withColumn("containment_new", c_new)
-        .withColumn("containment_other", c_other)
-        .filter(
-            F.greatest(F.col("containment_new"), F.col("containment_other"))
-            >= threshold
-        )
-        .select(
-            "new_doc",
-            "other_doc",
-            F.col("n_common").cast("long").alias("n_common"),
-            "containment_new",
-            "containment_other",
-            (F.col("other_doc") >= F.lit(new_max_id)).alias("in_index"),
-        )
+    inter = _shared_shingles(cands, sh, "new_doc", "other_doc")
+    overlap = _with_sizes(inter, sh, "new_doc", "other_doc")
+    return _containment_at_least(
+        overlap, threshold, "containment_new", "containment_other"
+    ).select(
+        "new_doc",
+        "other_doc",
+        F.col("n_common").cast("long").alias("n_common"),
+        "containment_new",
+        "containment_other",
+        (F.col("other_doc") >= F.lit(new_max_id)).alias("in_index"),
     )

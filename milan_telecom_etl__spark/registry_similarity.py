@@ -1518,7 +1518,7 @@ def q_paraphrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the semantic side is the linear auto-plane blocking; the
     lexical re-score touches only the emitted pairs (|pairs| * |doc
     shingles| join rows, LSH-bounded), never a corpus self-join."""
-    from .operators.dedup import shingle_table
+    from .operators.dedup import _shared_shingles, _with_sizes, shingle_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
@@ -1530,24 +1530,11 @@ def q_paraphrase_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_vectors=table_row_count(sf_dir, "embeddings"),
     ).persist()  # two consumers: the intersect probe + the final join
     sh = shingle_table(docs, max_shingle_df=None).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        sem.select("vec_a", "vec_b")
-        .join(sh.select(F.col("doc_id").alias("vec_a"), "shingle"), "vec_a")
-        .join(
-            sh.select(F.col("doc_id").alias("vec_b"), "shingle"),
-            ["vec_b", "shingle"],
-        )
-        .groupBy("vec_a", "vec_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("vec_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("vec_b"), F.col("n").alias("nb"))
+    inter = _shared_shingles(sem.select("vec_a", "vec_b"), sh, "vec_a", "vec_b")
     nc = F.coalesce(F.col("n_common"), F.lit(0))
-    jac = F.round(nc / (F.col("na") + F.col("nb") - nc), 6)
+    jac = F.round(nc / (F.col("size_a") + F.col("size_b") - nc), 6)
     return (
-        sem.join(sa, "vec_a")
-        .join(sb, "vec_b")
+        _with_sizes(sem, sh, "vec_a", "vec_b")
         .join(inter, ["vec_a", "vec_b"], "left")
         .select(
             F.col("vec_a").alias("doc_a"),

@@ -265,13 +265,29 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.1)
 
 
-def _minhash_sql(num_hashes: int = 16) -> str:
+def _minhash_sql_body(num_hashes: int = 16) -> str:
     aggs = []
     for i, (a, b) in enumerate(D._hash_params(num_hashes)):
         aggs.append(
             f"min(({a} * (shingle_hash % {D.MERSENNE_31}) + {b}) % {D.MERSENNE_31}) AS mh_{i}"
         )
-    return f"WITH {_SHINGLE_CTE} SELECT doc_id, {', '.join(aggs)} FROM sh GROUP BY doc_id"
+    return f"SELECT doc_id, {', '.join(aggs)} FROM sh GROUP BY doc_id"
+
+
+def _minhash_sql(num_hashes: int = 16) -> str:
+    return f"WITH {_SHINGLE_CTE} {_minhash_sql_body(num_hashes)}"
+
+
+def _banded_sql(num_hashes: int, band_size: int) -> str:
+    """(doc_id, band_id, band_hash) over the `sig` CTE, one SELECT per
+    band — dedup.minhash_banded's layout."""
+    bands = []
+    for bi in range(num_hashes // band_size):
+        cols = "||','||".join(
+            f"CAST(mh_{bi * band_size + j} AS VARCHAR)" for j in range(band_size)
+        )
+        bands.append(f"SELECT doc_id, {bi} AS band_id, md5({cols}) AS band_hash FROM sig")
+    return " UNION ALL ".join(bands)
 
 
 @register("minhash_signatures", _minhash_sql())
@@ -281,32 +297,15 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_sql(num_hashes: int = 16, band_size: int = 2) -> str:
-    n_bands = num_hashes // band_size
-    bands = []
-    for bi in range(n_bands):
-        cols = "||','||".join(
-            f"CAST(mh_{bi * band_size + j} AS VARCHAR)" for j in range(band_size)
-        )
-        bands.append(f"SELECT doc_id, {bi} AS band_id, md5({cols}) AS band_hash FROM sig")
-    banded = " UNION ALL ".join(bands)
     return f"""
     WITH {_SHINGLE_CTE},
     sig AS ({_minhash_sql_body(num_hashes)}),
-    banded AS ({banded})
+    banded AS ({_banded_sql(num_hashes, band_size)})
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM banded a JOIN banded b
       ON a.band_id = b.band_id AND a.band_hash = b.band_hash
          AND a.doc_id < b.doc_id
     """
-
-
-def _minhash_sql_body(num_hashes: int = 16) -> str:
-    aggs = []
-    for i, (a, b) in enumerate(D._hash_params(num_hashes)):
-        aggs.append(
-            f"min(({a} * (shingle_hash % {D.MERSENNE_31}) + {b}) % {D.MERSENNE_31}) AS mh_{i}"
-        )
-    return f"SELECT doc_id, {', '.join(aggs)} FROM sh GROUP BY doc_id"
 
 
 def _lsh_verified_sql(
@@ -362,18 +361,10 @@ def _incremental_dedup_sql(
     new_max_id) — against any index doc, or keep-first within the
     batch — then the same exact-Jaccard verify over the df-capped
     shingle table."""
-    n_bands = num_hashes // band_size
-    bands = []
-    for bi in range(n_bands):
-        cols = "||','||".join(
-            f"CAST(mh_{bi * band_size + j} AS VARCHAR)" for j in range(band_size)
-        )
-        bands.append(f"SELECT doc_id, {bi} AS band_id, md5({cols}) AS band_hash FROM sig")
-    banded = " UNION ALL ".join(bands)
     cand_inner = f"""
     WITH {_SHINGLE_CTE},
     sig AS ({_minhash_sql_body(num_hashes)}),
-    banded AS ({banded})
+    banded AS ({_banded_sql(num_hashes, band_size)})
     SELECT DISTINCT nb.doc_id AS new_doc, c.doc_id AS dup_of
     FROM banded nb JOIN banded c
       ON nb.band_id = c.band_id AND nb.band_hash = c.band_hash
@@ -589,14 +580,8 @@ def q_incremental_dedup_appendable(spark: SparkSession, sf_dir: str) -> DataFram
         # (per-word rows defeat the text column's page compression)
         size_fraction=8.0,
     )
-    heavy = (
-        sh_idx.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > D.DEFAULT_MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    sh = sh_idx.select("doc_id", "shingle").join(
-        F.broadcast(heavy), "shingle", "left_anti"
+    sh = D._drop_stop_shingles(
+        sh_idx.select("doc_id", "shingle"), D.DEFAULT_MAX_SHINGLE_DF
     )
     return D._incremental_verify(cand, sh, 0.5, b)
 

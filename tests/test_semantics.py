@@ -119,6 +119,35 @@ def test_shared_wide_signature_yields_identical_candidates(spark):
         sig128.unpersist()
 
 
+def test_minhash_build_round_trips_do_not_grow_with_num_hashes(spark, monkeypatch):
+    """Building the banded MinHash table costs a number of driver→JVM
+    round trips that does not grow with the signature width: the (a, b)
+    parameter table and the band array are each one SQL expression, not
+    a Column call per hash or per band element."""
+    from py4j.java_gateway import GatewayClient
+
+    from milan_telecom_etl__spark.operators.dedup import minhash_banded
+
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    send = GatewayClient.send_command
+    calls = [0]
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    def build_calls(num_hashes: int, band_size: int) -> int:
+        calls[0] = 0
+        minhash_banded(docs, num_hashes=num_hashes, band_size=band_size)
+        return calls[0]
+
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    narrow = build_calls(16, 2)
+    wide = build_calls(128, 4)
+    assert narrow > 0
+    assert wide <= narrow + 50, (narrow, wide)
+
+
 def test_minhash_sharp_banding_recalls_planted_near_dups(spark):
     """The 64-hash/16x4-band sharp twin must still recover the planted
     high-Jaccard pairs (they sit well above the J=0.5 S-curve midpoint,

@@ -123,17 +123,23 @@ def test_minhash_build_round_trips_do_not_grow_with_num_hashes(spark, monkeypatc
     """Building the banded MinHash table costs a number of driver→JVM
     round trips that does not grow with the signature width: the (a, b)
     parameter table and the band array are each one SQL expression, not
-    a Column call per hash or per band element."""
+    a Column call per hash or per band element. Only this thread's calls
+    count: py4j's finalizer thread sends object-release commands
+    whenever garbage collection happens to run."""
+    import threading
+
     from py4j.java_gateway import GatewayClient
 
     from milan_telecom_etl__spark.operators.dedup import minhash_banded
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     send = GatewayClient.send_command
+    builder = threading.get_ident()
     calls = [0]
 
     def counted(self, *args, **kwargs):
-        calls[0] += 1
+        if threading.get_ident() == builder:
+            calls[0] += 1
         return send(self, *args, **kwargs)
 
     def build_calls(num_hashes: int, band_size: int) -> int:

@@ -2,7 +2,8 @@
 (reference main.py:57-65: --setup/--load-geo/--load-data/--test/--all/
 --limit-files). `--load-data` loads per file for both facts: a rerun
 on the same CSVs is a no-op, and a directory with a new day appends
-only that day.
+only that day. `--all` is `pipeline.run_all`, whose loads run as
+concurrent Spark jobs.
 
 Usage:
   python -m milan_telecom_etl__spark --all --data-dir /data \\
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import logging
+import os
 import sys
 
 
@@ -40,6 +42,7 @@ def main(argv: list[str] | None = None) -> int:
         load_geometries,
         load_mobility,
         load_traffic,
+        run_all,
         run_test_query,
     )
     from .session import get_spark
@@ -48,19 +51,28 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     wh = Warehouse(spark, args.warehouse)
 
-    import os
-
-    if args.setup or args.all:
-        os.makedirs(args.warehouse, exist_ok=True)
-    if args.load_geo or args.all:
-        load_geometries(wh, args.grid, args.provinces)
-    if args.load_data or args.all:
-        r = load_traffic(wh, args.data_dir, args.limit_files)
+    reports = {}
+    if args.all:
+        reports = run_all(
+            spark, args.warehouse, args.data_dir, args.grid, args.provinces,
+            args.limit_files,
+        )
+    else:
+        if args.setup:
+            os.makedirs(args.warehouse, exist_ok=True)
+        if args.load_geo:
+            load_geometries(wh, args.grid, args.provinces)
+        if args.load_data:
+            reports = {
+                "traffic": load_traffic(wh, args.data_dir, args.limit_files),
+                "mobility": load_mobility(wh, args.data_dir, args.limit_files),
+            }
+        wh.register_views()
+    if reports:
+        r, rm = reports["traffic"], reports["mobility"]
         print(f"traffic: loaded={r.loaded_rows} skipped={r.skipped} "
               f"invalid_dates={r.invalid_dates} rejected_cells={r.rejected_cells}")
-        rm = load_mobility(wh, args.data_dir, args.limit_files)
         print(f"mobility: loaded={rm.loaded_rows} skipped={rm.skipped}")
-    wh.register_views()
     if args.test or args.all:
         top = run_test_query(wh, limit=args.top_k)
         for row in top.collect():

@@ -28,6 +28,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # WGS84 / UTM zone 32N constants (EPSG:32632)
 WGS84_A = 6378137.0
@@ -49,9 +50,10 @@ _M4 = 15.0 * _E4 / 256.0 + 45.0 * _E6 / 1024.0
 _M6 = 35.0 * _E6 / 3072.0
 
 
-def tm_forward_xy(lon_deg: Column, lat_deg: Column) -> tuple[Column, Column]:
-    """Transverse Mercator forward projection (WGS84 → UTM 32N), as a
-    pair of column expressions. Snyder PP1395 eq. 8-9/8-10."""
+def _tm_terms(lon_deg: Column, lat_deg: Column) -> dict[str, Column]:
+    """The per-point terms of the Transverse Mercator series (Snyder
+    PP1395 eq. 8-12..8-15 and 3-21): n_rad (N), t, c, a, tan_phi and
+    the meridional arc m. `_tm_xy` turns them into easting/northing."""
     lam = F.radians(lon_deg)
     phi = F.radians(lat_deg)
     lam0 = math.radians(UTM32_LON0_DEG)
@@ -60,17 +62,27 @@ def tm_forward_xy(lon_deg: Column, lat_deg: Column) -> tuple[Column, Column]:
     cos_phi = F.cos(phi)
     tan_phi = F.tan(phi)
 
-    n_rad = F.lit(WGS84_A) / F.sqrt(F.lit(1.0) - F.lit(_E2) * sin_phi * sin_phi)
-    t = tan_phi * tan_phi
-    c = F.lit(_EP2) * cos_phi * cos_phi
-    a_ = (lam - F.lit(lam0)) * cos_phi
+    return {
+        "n_rad": F.lit(WGS84_A) / F.sqrt(F.lit(1.0) - F.lit(_E2) * sin_phi * sin_phi),
+        "t": tan_phi * tan_phi,
+        "c": F.lit(_EP2) * cos_phi * cos_phi,
+        "a": (lam - F.lit(lam0)) * cos_phi,
+        "tan_phi": tan_phi,
+        "m": F.lit(WGS84_A) * (
+            F.lit(_M0) * phi
+            - F.lit(_M2) * F.sin(F.lit(2.0) * phi)
+            + F.lit(_M4) * F.sin(F.lit(4.0) * phi)
+            - F.lit(_M6) * F.sin(F.lit(6.0) * phi)
+        ),
+    }
 
-    m = F.lit(WGS84_A) * (
-        F.lit(_M0) * phi
-        - F.lit(_M2) * F.sin(F.lit(2.0) * phi)
-        + F.lit(_M4) * F.sin(F.lit(4.0) * phi)
-        - F.lit(_M6) * F.sin(F.lit(6.0) * phi)
-    )
+
+def _tm_xy(terms: dict[str, Column] | Column) -> tuple[Column, Column]:
+    """Easting/northing from `_tm_terms` (a dict, or a struct column
+    with the same fields): the powers of a and the x/y series, Snyder
+    PP1395 eq. 8-9/8-10."""
+    n_rad, t, c, a_ = terms["n_rad"], terms["t"], terms["c"], terms["a"]
+    tan_phi, m = terms["tan_phi"], terms["m"]
 
     a2 = a_ * a_
     a3 = a2 * a_
@@ -115,6 +127,12 @@ def tm_forward_xy(lon_deg: Column, lat_deg: Column) -> tuple[Column, Column]:
         )
     ) + F.lit(UTM_FALSE_NORTHING)
     return x, y
+
+
+def tm_forward_xy(lon_deg: Column, lat_deg: Column) -> tuple[Column, Column]:
+    """Transverse Mercator forward projection (WGS84 → UTM 32N), as a
+    pair of column expressions. Snyder PP1395 eq. 8-9/8-10."""
+    return _tm_xy(_tm_terms(lon_deg, lat_deg))
 
 
 def tm_forward_py(lon_deg: float, lat_deg: float) -> tuple[float, float]:
@@ -247,11 +265,21 @@ def multipolygon_wkt(coords: Column) -> Column:
 
 def reproject_polygon(coords: Column) -> Column:
     """C8: reproject Polygon coordinates 4326→32632 point-by-point —
-    a nested transform whose leaves are the TM series expressions."""
+    a nested transform whose leaves are the TM series expressions.
+
+    Spark evaluates higher-order-function lambdas without codegen and
+    without common-subexpression elimination, so an inline
+    `tm_forward_xy` would rebuild every term (and its trig calls) at
+    each use. The terms are bound ONCE per point instead: a 1-element
+    `transform` over `array(struct(terms))` acts as a let-binding (as
+    in `dedup._minhash_sig_arr`), and the x/y series read its fields.
+    Same operations on the same values: bit-identical to
+    `tm_forward_xy`."""
 
     def _pt(pt: Column) -> Column:
-        x, y = tm_forward_xy(F.element_at(pt, 1), F.element_at(pt, 2))
-        return F.array(x, y)
+        terms = _tm_terms(F.element_at(pt, 1), F.element_at(pt, 2))
+        bound = F.array(F.struct(*[v.alias(k) for k, v in terms.items()]))
+        return F.element_at(F.transform(bound, lambda s: F.array(*_tm_xy(s))), 1)
 
     return F.transform(coords, lambda ring: F.transform(ring, _pt))
 
@@ -268,9 +296,19 @@ def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     Spark-first restatement of gpd.read_file (reference src/etl.py:32,69):
     multiLine JSON scan → posexplode(features). feature_index preserves
     file order — the reference keys grid cells by DataFrame index
-    (C6, reference src/etl.py:37), so the index is semantic.
+    (C6, reference src/etl.py:37), so the index is semantic. The schema
+    is inferred, which costs one scan job.
     """
-    raw = spark.read.option("multiLine", True).json(path)
+    return _read_features(spark, path, None)
+
+
+def _read_features(
+    spark: SparkSession, path: str, schema: T.StructType | None
+) -> DataFrame:
+    """`read_geojson` with an optional declared file schema: a
+    declared one needs no inference job."""
+    reader = spark.read.option("multiLine", True)
+    raw = (reader if schema is None else reader.schema(schema)).json(path)
     feats = raw.select(F.posexplode("features").alias("feature_index", "f"))
     return feats.select(
         "feature_index",

@@ -21,6 +21,14 @@ facts → smoke query. Spark restatement:
   counters per file at src/etl.py:129-169).
 - The per-file loop disappears: one spark.read.csv over the sorted,
   limited glob (S1/S2); Spark schedules per-file splits.
+- `run_all` runs the independent loads as concurrent Spark jobs, in
+  three chains on a thread pool scoped to the call: the grid
+  dimension; the provinces dimension then the mobility fact (its
+  province semi-join reads `dim_provinces_it`, so it follows that
+  write); the traffic fact. The same jobs as one after another, now
+  overlapped: a multiLine GeoJSON file is not splittable, so each
+  dimension write is a single-task job that left the other cores
+  idle. `drop_all` runs before the pool and `register_views` after.
 """
 
 from __future__ import annotations
@@ -29,8 +37,10 @@ import json
 import logging
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -312,18 +322,38 @@ def run_all(
     """The --all flow (reference main.py:67-75). `drop_existing=True`
     is the reference's destructive rebuild flag
     (create_schema(drop_existing=True)): wipe the warehouse first so
-    every loader re-runs instead of idempotence-skipping."""
+    every loader re-runs instead of idempotence-skipping.
+
+    The loads run as three concurrent chains (module docstring); the
+    call returns once every chain has ended, and a chain's exception
+    is raised unchanged after that."""
     wh = Warehouse(spark, warehouse_dir)
     os.makedirs(warehouse_dir, exist_ok=True)
     if drop_existing:
         wh.drop_all()
-    load_geometries(wh, grid_file, provinces_file)
-    reports = {
-        "traffic": load_traffic(wh, data_dir, limit_files),
-        "mobility": load_mobility(wh, data_dir, limit_files),
+
+    def provinces_then_mobility() -> LoadReport:
+        # mobility's province semi-join reads dim_provinces_it
+        load_geometries(wh, None, provinces_file)
+        return load_mobility(wh, data_dir, limit_files)
+
+    chains = {
+        "grid": lambda: load_geometries(wh, grid_file, None),
+        "mobility": provinces_then_mobility,
+        "traffic": lambda: load_traffic(wh, data_dir, limit_files),
     }
+    # each task carries the caller's local properties (job group,
+    # description, scheduler pool) and job tags to the jobs it launches;
+    # wrapping per task gives each thread its own copy, which Spark then
+    # mutates (the SQL execution id) while the task runs
+    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
+        futures = {
+            k: pool.submit(inheritable_thread_target(spark)(f)) for k, f in chains.items()
+        }
+    # read every result: a failed chain raises its exception here
+    done = {k: f.result() for k, f in futures.items()}
     wh.register_views()
-    return reports
+    return {"traffic": done["traffic"], "mobility": done["mobility"]}
 
 
 def write_bucketed(

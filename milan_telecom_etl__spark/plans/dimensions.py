@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.geo import (
+    _read_features,
     bounds_string,
     multipolygon_envelope,
     multipolygon_wkt,
@@ -20,6 +21,7 @@ from ..operators.geo import (
     read_geojson,
     reproject_polygon,
 )
+from ..schemas import GRID_GEOJSON
 
 
 def load_grid_dim(
@@ -32,8 +34,10 @@ def load_grid_dim(
     (reference src/etl.py:37), off by one from the facts' CellID. We
     reproduce that faithfully when bug_compatible_ids=True (default, for
     parity) and use the source cellId otherwise (the fixed behavior).
+    The grid file's schema is fixed, so it is declared (`GRID_GEOJSON`)
+    rather than inferred with a scan job.
     """
-    feats = read_geojson(spark, path)
+    feats = _read_features(spark, path, GRID_GEOJSON)
     # C8: grid file is EPSG:4326 → reproject to 32632
     projected = feats.select(
         "feature_index",

@@ -45,6 +45,26 @@ MOBILITY_RAW = T.StructType(
     ]
 )
 
+# milano-grid.geojson — reference src/etl.py:32. A Polygon
+# FeatureCollection with one property, as multiLine JSON inference types
+# it; the grid dimension reads with it instead of inferring. The
+# provinces file keeps inference: its property names vary
+# (PROVINCIA/name/provincia).
+_GRID_FEATURE = (
+    T.StructType()
+    .add(
+        "geometry",
+        T.StructType()
+        .add("coordinates", T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType()))))
+        .add("type", T.StringType()),
+    )
+    .add("properties", T.StructType().add("cellId", T.LongType()))
+    .add("type", T.StringType())
+)
+GRID_GEOJSON = (
+    T.StructType().add("features", T.ArrayType(_GRID_FEATURE)).add("type", T.StringType())
+)
+
 TRAFFIC_METRICS = ["smsin", "smsout", "callin", "callout", "internet"]
 MOBILITY_METRICS = ["cell2province", "province2cell"]
 

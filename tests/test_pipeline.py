@@ -462,3 +462,131 @@ def test_interrupted_append_loads_each_file_once(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(fact_path).count() == 3
     assert load_traffic(wh, str(feed)).skipped
     assert spark.read.parquet(fact_path).count() == 3
+
+
+def _dims(data_dir) -> dict:
+    return dict(
+        grid_file=str(data_dir / "grid.geojson"),
+        provinces_file=str(data_dir / "provinces.geojson"),
+    )
+
+
+def test_run_all_overlaps_the_independent_loads(spark, data_dir, tmp_path, monkeypatch):
+    # the grid dimension waits, before its write, for the traffic load to
+    # start: loads run one after another would wait here in vain
+    import threading
+
+    from milan_telecom_etl__spark import pipeline
+
+    traffic_started = threading.Event()
+    load_traffic_, load_grid_dim = pipeline.load_traffic, pipeline.load_grid_dim
+
+    def traffic(*args, **kwargs):
+        traffic_started.set()
+        return load_traffic_(*args, **kwargs)
+
+    def grid_dim(*args, **kwargs):
+        assert traffic_started.wait(60), "the grid load ran before the traffic load started"
+        return load_grid_dim(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "load_traffic", traffic)
+    monkeypatch.setattr(pipeline, "load_grid_dim", grid_dim)
+    wh_dir = str(tmp_path / "wh")
+    reports = run_all(spark, wh_dir, str(data_dir), **_dims(data_dir))
+    assert not reports["traffic"].skipped and not reports["mobility"].skipped
+    assert spark.read.parquet(Warehouse(spark, wh_dir).path("dim_grid_milan")).count() == 4
+
+
+def test_run_all_raises_a_failed_chain_after_the_others_end(
+    spark, data_dir, tmp_path, monkeypatch
+):
+    # the traffic chain fails while the mobility chain still has its
+    # loads ahead: run_all raises that exception itself, only once no
+    # job of the other chains is left running
+    import os
+    import threading
+
+    from milan_telecom_etl__spark import pipeline
+
+    provinces_started = threading.Event()
+    boom = RuntimeError("traffic chain failed")
+    load_provinces_dim = pipeline.load_provinces_dim
+
+    def provinces_dim(*args, **kwargs):
+        provinces_started.set()
+        return load_provinces_dim(*args, **kwargs)
+
+    def failing_traffic(*args, **kwargs):
+        provinces_started.wait(60)
+        raise boom
+
+    monkeypatch.setattr(pipeline, "load_provinces_dim", provinces_dim)
+    monkeypatch.setattr(pipeline, "load_traffic", failing_traffic)
+    wh_dir = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError) as raised:
+        run_all(spark, wh_dir, str(data_dir), **_dims(data_dir))
+    assert raised.value is boom
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    wh = Warehouse(spark, wh_dir)
+    for table in ("dim_grid_milan", "dim_provinces_it", "fact_mobility_provinces"):
+        assert os.path.exists(os.path.join(wh.path(table), "_SUCCESS")), table
+    assert not os.path.exists(wh.path("fact_traffic_milan"))
+    # a rerun loads only what is missing
+    monkeypatch.undo()
+    reports = run_all(spark, wh_dir, str(data_dir), **_dims(data_dir))
+    assert not reports["traffic"].skipped and reports["mobility"].skipped
+    assert reports["traffic"].loaded_rows == 4
+
+
+def test_run_all_jobs_carry_the_callers_local_properties(spark, data_dir, tmp_path):
+    # the job group and description set by the caller reach every job
+    # the load chains launch on their own threads
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    dag = jsc.dagScheduler()
+    jobs0 = dag.numTotalJobs()
+    sc.setJobGroup("run-all-group", "reference load")
+    try:
+        run_all(spark, str(tmp_path / "wh"), str(data_dir), **_dims(data_dir))
+    finally:
+        sc._jsc.clearJobGroup()
+    jsc.listenerBus().waitUntilEmpty()
+    launched = set(range(jobs0, dag.numTotalJobs()))
+    assert launched
+    assert set(sc.statusTracker().getJobIdsForGroup("run-all-group")) == launched
+    store = jsc.statusStore()
+    assert {store.job(j).description().get() for j in launched} == {"reference load"}
+
+
+def test_cli_all_prints_the_reports_and_the_test_query(spark, data_dir, tmp_path):
+    # `--all` goes through run_all; a subprocess, because main() stops
+    # its session
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    for f in ("sms-call-internet-mi-2013-11-01.csv", "mi-to-provinces-2013-11-01.csv"):
+        shutil.copy(data_dir / f, feed / f)
+    wh_dir = str(tmp_path / "wh")
+    dims = _dims(data_dir)
+    proc = subprocess.run(
+        [sys.executable, "-m", "milan_telecom_etl__spark", "--all",
+         "--data-dir", str(feed), "--warehouse", wh_dir,
+         "--grid", dims["grid_file"], "--provinces", dims["provinces_file"]],
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    assert "traffic: loaded=4 skipped=False invalid_dates=1 rejected_cells=1" in lines
+    assert "mobility: loaded=4 skipped=False" in lines
+    top = run_test_query(Warehouse(spark, wh_dir)).collect()
+    assert top
+    assert [ln for ln in lines if ln.startswith("cell_id=")] == [
+        f"cell_id={r['cell_id']}\tavg_load={r['avg_load']:.4f}" for r in top
+    ]
